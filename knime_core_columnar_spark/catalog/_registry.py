@@ -16,10 +16,11 @@ Determinism rules (doubles are NOT bit-stable under reordered reduction):
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Dict
+from typing import Dict, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from knime_core_columnar_spark.schema import ROW_KEY
 from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
@@ -58,8 +59,7 @@ def _ensure_pkg_on_executors(spark: SparkSession) -> None:
     import tempfile
     import zipfile
 
-    # the TOP-LEVEL package dir (this file lives in the catalog/
-    # subpackage since the round-6 split — one more dirname up)
+    # the TOP-LEVEL package dir (this file lives in catalog/)
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     zpath = os.path.join(tempfile.gettempdir(), "knime_core_columnar_spark_pkg.zip")
     tmp = zpath + f".{os.getpid()}.part"
@@ -75,53 +75,74 @@ def _ensure_pkg_on_executors(spark: SparkSession) -> None:
     _PKG_SHIPPED.add(key)
 
 
-#: (path, mtime) → (row-group count, total byte size); footer metadata
-#: and the size walk are driver-side reads, cached together so repeated
-#: query construction costs nothing (ADVICE r11: the size was re-walked
-#: per _tw call while the row-group count was cached)
-_SCAN_SPLITS_CACHE: dict[tuple[str, float], tuple[int, int]] = {}
+class TableMeta(NamedTuple):
+    """What the driver knows about one stored table without scanning it:
+    the Spark schema, the parquet row-group count (the upper bound on a
+    scan's natural task parallelism — a row group is parquet's minimum
+    read unit), the exact row count from the footers, and the on-disk
+    byte size. Fields are None when the path cannot be stat'ed locally."""
+
+    schema: StructType | None
+    row_groups: int | None
+    rows: int | None
+    bytes: int | None
 
 
-def _scan_splits_and_size(path: str) -> tuple[int, int] | None:
-    """(row-group count, byte size) of a parquet file/dir. The count is
-    the upper bound on a scan's natural task parallelism (a row group
-    is parquet's minimum read unit — a single-row-group file scans as
-    ONE task no matter how the planner splits it). Local paths only;
-    None when unknowable."""
+_UNKNOWN_TABLE = TableMeta(None, None, None, None)
+
+#: path → (version, TableMeta), where the version is (file, mtime_ns,
+#: size) of every file under the path. Rewriting any file in place
+#: changes the version, so a cached schema never outlives the data it
+#: describes. Metadata only: no results are cached.
+_TABLE_META: dict[str, tuple[tuple, TableMeta]] = {}
+
+
+def _table_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
+    """Metadata of the catalog table ``{sf_dir}/{name}.parquet`` (a file
+    or a directory), built once per table version from one pass over the
+    parquet footers plus one Spark schema inference, then served from
+    :data:`_TABLE_META`. A miss costs one Spark job; a hit costs only
+    the stat calls that form the version."""
     import os
 
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        return None
-    key = (path, mtime)
-    hit = _SCAN_SPLITS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    path = f"{sf_dir}/{name}.parquet"
     try:
         if os.path.isdir(path):
-            import pyarrow.dataset as ds
-
-            n = sum(
-                f.metadata.num_row_groups
-                for f in ds.dataset(path, format="parquet").get_fragments()
-            )
-            sz = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(path) for f in fs
+            files = sorted(
+                os.path.join(r, f) for r, _d, fs in os.walk(path) for f in fs
             )
         else:
-            import pyarrow.parquet as pq
+            files = [path]
+        stats = [os.stat(f) for f in files]
+    except OSError:
+        return _UNKNOWN_TABLE
+    version = tuple(
+        (f, st.st_mtime_ns, st.st_size) for f, st in zip(files, stats)
+    )
+    hit = _TABLE_META.get(path)
+    if hit is not None and hit[0] == version:
+        return hit[1]
+    import pyarrow as pa
+    import pyarrow.dataset as ds
 
-            n = pq.read_metadata(path).num_row_groups
-            sz = os.path.getsize(path)
-    except Exception:
-        return None
-    _SCAN_SPLITS_CACHE[key] = (n, sz)
-    return n, sz
+    try:
+        footers = [
+            f.metadata
+            for f in ds.dataset(path, format="parquet").get_fragments()
+        ]
+    except (OSError, pa.ArrowException):
+        return _UNKNOWN_TABLE
+    meta = TableMeta(
+        schema=spark.read.parquet(path).schema,
+        row_groups=sum(m.num_row_groups for m in footers),
+        rows=sum(m.num_rows for m in footers),
+        bytes=sum(st.st_size for st in stats),
+    )
+    _TABLE_META[path] = (version, meta)
+    return meta
 
 
-def _widen_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+def _widen_scan(spark: SparkSession, df: DataFrame, meta: TableMeta) -> DataFrame:
     """Scale-ADAPTIVE scan parallelization (guide §2.5, input skew:
     "one huge unsplittable file ... repartition immediately after the
     read"). The sandbox testdata ships ONE row group per table, so
@@ -135,16 +156,12 @@ def _widen_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     condition is false (a 100 TB table has tens of thousands of row
     groups) and this is a NO-OP — nothing here is tuned to local[32];
     the threshold derives from the session's own parallelism."""
-    par = spark.sparkContext.defaultParallelism
-    meta = _scan_splits_and_size(path)
-    if meta is None:
-        return df
-    natural, sz = meta
     # tiny dimensions (region/nation/supplier) stay as-is: the exchange
     # would cost more than the serial scan it parallelizes
-    if sz < 512 * 1024:
+    if meta.bytes is None or meta.bytes < 512 * 1024:
         return df
-    if natural < max(2, par // 4):
+    par = spark.sparkContext.defaultParallelism
+    if meta.row_groups < max(2, par // 4):
         return df.repartition(par)
     return df
 
@@ -161,7 +178,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # refuses (PARQUET_TYPE_ILLEGAL).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    schema = _table_meta(spark, sf_dir, name).schema
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) parquet read as long via nanosAsLong — restore
         # timestamp_ntz at micro precision (what DuckDB reads natively).
@@ -181,32 +200,8 @@ def _tw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (bpe_encode 2.5× worse). Each call site below was measured both
     ways (OPTIMIZATION_r11.md)."""
     return _widen_scan(
-        spark, _t(spark, sf_dir, name), f"{sf_dir}/{name}.parquet"
+        spark, _t(spark, sf_dir, name), _table_meta(spark, sf_dir, name)
     )
-
-
-def _parquet_rows(sf_dir: str, name: str) -> int | None:
-    """Exact row count from the Parquet footer — a driver-side metadata
-    read (no Spark job, no data scan). Used to feed operators whose tier
-    or seed selection needs the corpus size (kmeans_lite,
-    embedding_near_dup_pairs) so they never spend a counting scan.
-    Returns None for non-local paths so callers fall back to count()."""
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            import pyarrow.dataset as ds
-
-            return sum(
-                f.metadata.num_rows
-                for f in ds.dataset(path, format="parquet").get_fragments()
-            )
-        import pyarrow.parquet as pq
-
-        return pq.read_metadata(path).num_rows
-    except Exception:
-        return None
 
 
 def _dec(col, scale: int = 2):

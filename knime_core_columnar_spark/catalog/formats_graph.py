@@ -18,8 +18,8 @@ from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 from knime_core_columnar_spark.catalog._registry import (  # noqa: F401
     _artifact_tag,
     _ensure_pkg_on_executors,
-    _parquet_rows,
     _publish_dir,
+    _table_meta,
     _t,
     _tw,
     query,
@@ -321,7 +321,7 @@ def pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_pkg_on_executors(spark)
     e = _t(spark, sf_dir, "embeddings")
     cb = pq_train(
-        e, m=4, ks=16, corpus_count=_parquet_rows(sf_dir, "embeddings")
+        e, m=4, ks=16, corpus_count=_table_meta(spark, sf_dir, "embeddings").rows
     )
     codes = pq_encode(e, cb)
     out = pq_topk(codes, e.filter("vec_id < 5"), cb, k=5)

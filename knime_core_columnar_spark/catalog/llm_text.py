@@ -17,7 +17,7 @@ from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 
 from knime_core_columnar_spark.catalog._registry import (  # noqa: F401
     _dec,
-    _parquet_rows,
+    _table_meta,
     _t,
     _tw,
     query,
@@ -376,7 +376,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     return embedding_near_dup_pairs(
         e, threshold=0.4, use_lsh=False,
-        corpus_count=_parquet_rows(sf_dir, "embeddings"),
+        corpus_count=_table_meta(spark, sf_dir, "embeddings").rows,
     )
 
 
@@ -520,7 +520,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _tw(spark, sf_dir, "embeddings")
     return ivf_topk(e, e.filter("vec_id < 10"), k=5, ncells=16, nprobe=4,
-                    corpus_count=_parquet_rows(sf_dir, "embeddings"))
+                    corpus_count=_table_meta(spark, sf_dir, "embeddings").rows)
 
 
 @query(

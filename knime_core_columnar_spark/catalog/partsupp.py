@@ -41,7 +41,7 @@ from knime_core_columnar_spark.catalog._registry import (  # noqa: F401
     ORACLES,
     QUERIES,
     _dec,
-    _parquet_rows,
+    _table_meta,
     _t,
 )
 
@@ -72,7 +72,7 @@ def _synth_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to count() off local paths). Two suppliers per part, the
     fixture formula above. Collision-free because S ∉ {1, 7} at every
     testdata tier (collision requires 7 ≡ 0 mod S)."""
-    n_supp = _parquet_rows(sf_dir, "supplier")
+    n_supp = _table_meta(spark, sf_dir, "supplier").rows
     if n_supp is None:
         n_supp = _t(spark, sf_dir, "supplier").count()
     ks = spark.range(2).withColumnRenamed("id", "__k")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.catalog._registry import (
-    _parquet_rows,
+    _table_meta,
     _t,
     _tw,
     query,
@@ -338,7 +338,7 @@ def _r6x_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phash_near_dup_pairs(
         d, id_col="doc_id", payload_col="payload",
         max_hamming=9, band_bits=4, max_bucket=None,
-        corpus_count=_parquet_rows(sf_dir, "documents"),
+        corpus_count=_table_meta(spark, sf_dir, "documents").rows,
     )
 
 
@@ -600,7 +600,7 @@ def _r6x_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contrastive_pairs(
         _t(spark, sf_dir, "embeddings"), dim=64,
         pos_threshold=0.9, neg_low=0.0, neg_high=0.5, planes=4,
-        corpus_count=_parquet_rows(sf_dir, "embeddings"),
+        corpus_count=_table_meta(spark, sf_dir, "embeddings").rows,
     )
 
 
@@ -812,5 +812,5 @@ def _r6x_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "embeddings"),
         _t(spark, sf_dir, "documents"),
         dim=64, threshold=0.4, planes=4,
-        corpus_count=_parquet_rows(sf_dir, "embeddings"),
+        corpus_count=_table_meta(spark, sf_dir, "embeddings").rows,
     )

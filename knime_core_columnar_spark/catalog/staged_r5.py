@@ -18,7 +18,7 @@ from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 from knime_core_columnar_spark.catalog._registry import (  # noqa: F401
     ORACLES,
     QUERIES,
-    _parquet_rows,
+    _table_meta,
     _t,
     query,
 )
@@ -115,7 +115,8 @@ def _r5_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     return semantic_dedup(
-        e, k=8, threshold=0.4, corpus_count=_parquet_rows(sf_dir, "embeddings")
+        e, k=8, threshold=0.4,
+        corpus_count=_table_meta(spark, sf_dir, "embeddings").rows,
     )
 
 

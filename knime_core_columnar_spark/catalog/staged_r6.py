@@ -18,7 +18,7 @@ from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 from knime_core_columnar_spark.catalog._registry import (  # noqa: F401
     ORACLES,
     QUERIES,
-    _parquet_rows,
+    _table_meta,
     _t,
 )
 
@@ -48,7 +48,7 @@ def _r6_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from knime_core_columnar_spark.operators.sketch import top_tokens_exact
 
     d = _t(spark, sf_dir, "documents")
-    min_count = max(20, _parquet_rows(sf_dir, "documents") // 12)
+    min_count = max(20, _table_meta(spark, sf_dir, "documents").rows // 12)
     return top_tokens_exact(d, min_count=min_count, capacity=8192)
 
 

@@ -18,7 +18,7 @@ from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 from knime_core_columnar_spark.catalog._registry import (  # noqa: F401
     ORACLES,
     QUERIES,
-    _parquet_rows,
+    _table_meta,
     _t,
 )
 
@@ -60,7 +60,7 @@ def _r8_join_explosion_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _t(spark, sf_dir, "events")
-    n = _parquet_rows(sf_dir, "events")
+    n = _table_meta(spark, sf_dir, "events").rows
     thr = max(50, n // 128)
     return join_explosion_profile(
         e, e, "event_type", "event_type", min_left=thr, min_right=thr,

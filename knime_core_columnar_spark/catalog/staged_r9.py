@@ -18,7 +18,7 @@ from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 from knime_core_columnar_spark.catalog._registry import (  # noqa: F401
     ORACLES,
     QUERIES,
-    _parquet_rows,
+    _table_meta,
     _t,
     _tw,
 )
@@ -804,7 +804,7 @@ def _r9_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     return diverse_sample(
         e, k=8, n_per_cell=10, iters=2,
-        corpus_count=_parquet_rows(sf_dir, "embeddings"),
+        corpus_count=_table_meta(spark, sf_dir, "embeddings").rows,
     )
 
 

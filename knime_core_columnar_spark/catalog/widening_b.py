@@ -18,7 +18,7 @@ from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 from knime_core_columnar_spark.catalog._registry import (  # noqa: F401
     _dec,
     _ensure_pkg_on_executors,
-    _parquet_rows,
+    _table_meta,
     _t,
     _tw,
     query,
@@ -1048,7 +1048,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     return kmeans_lite(
-        e, k=8, iters=2, corpus_count=_parquet_rows(sf_dir, "embeddings")
+        e, k=8, iters=2, corpus_count=_table_meta(spark, sf_dir, "embeddings").rows
     )
 
 

@@ -34,7 +34,7 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.parquet.filterPushdown": "true",
     # Read INT64 TIMESTAMP(NANOS) parquet columns (e.g. events.ts) as long;
-    # sources.load_table converts them to timestamp_ntz at micro precision.
+    # catalog/_registry._t converts them to timestamp_ntz at micro precision.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     # Planner niceties.

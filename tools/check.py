@@ -223,9 +223,6 @@ def main():
                 "n_run": n_run,
                 "n_pass": max(n_run - len(failures), 0),
                 "n_fail": len(failures),
-                "staged_env": sorted(
-                    k for k in os.environ if k.startswith("SPARK_GRAFT_REGISTER_")
-                ),
             },
             **results,
         }

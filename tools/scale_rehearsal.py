@@ -40,7 +40,6 @@ HEAVY = ["dedup_minhash_lsh", "neardup_pipeline", "kmeans_clusters",
          # round-5: the connected-components family (part-based; the
          # synthesizer emits decorrelated part replicas for these)
          "entity_resolution", "golden_record", "neardup_clusters",
-         # round-5 staged heavies (need SPARK_GRAFT_REGISTER_R9=1):
          # token-linear substring dedup + the CC-riding split
          "dup_span_extract", "dup_span_apply", "leakage_safe_split",
          # round-6: the full-corpus mapInPandas tokenizer scan (the
@@ -284,20 +283,12 @@ def main():
     )
 
     def _contrastive_scale(spark, sf_dir):
-        import pyarrow.parquet as _pq
         import math as _math
 
-        path = f"{sf_dir}/embeddings.parquet"
-        try:
-            import pyarrow.dataset as _ds
-
-            n = sum(f.metadata.num_rows
-                    for f in _ds.dataset(path, format="parquet").get_fragments())
-        except Exception:
-            n = _pq.read_metadata(path).num_rows
+        n = catalog._table_meta(spark, sf_dir, "embeddings").rows
         planes = max(4, int(_math.ceil(_math.log2(max(n, 1) / 256.0))))
         return contrastive_pairs(
-            spark.read.parquet(path), dim=64,
+            catalog._t(spark, sf_dir, "embeddings"), dim=64,
             pos_threshold=0.9, neg_low=0.0, neg_high=0.5, planes=planes,
         )
 
@@ -383,12 +374,9 @@ def main():
                  if os.environ.get("SPARK_GRAFT_REHEARSAL_QUERIES") else HEAVY)
         for name in names:
             if name not in catalog.QUERIES:
-                # staged name without its SPARK_GRAFT_REGISTER_R* env,
-                # or a typo in SPARK_GRAFT_REHEARSAL_QUERIES — say so
-                # loudly instead of silently truncating the report
-                print(f"# SKIPPED {name}: not registered (set "
-                      f"SPARK_GRAFT_REGISTER_R* or check the name)",
-                      file=sys.stderr)
+                # a typo in SPARK_GRAFT_REHEARSAL_QUERIES — say so loudly
+                # instead of silently truncating the report
+                print(f"# SKIPPED {name}: unknown query", file=sys.stderr)
                 continue
             best = None
             for _ in range(2):
