@@ -90,22 +90,19 @@ class TableMeta(NamedTuple):
 
 _UNKNOWN_TABLE = TableMeta(None, None, None, None)
 
-#: path → (version, TableMeta), where the version is (file, mtime_ns,
-#: size) of every file under the path. Rewriting any file in place
-#: changes the version, so a cached schema never outlives the data it
-#: describes. Metadata only: no results are cached.
+#: path → (version, TableMeta), the version from :func:`_table_version`,
+#: so a cached schema never outlives the data it describes. Metadata
+#: only: no results are cached.
 _TABLE_META: dict[str, tuple[tuple, TableMeta]] = {}
 
 
-def _table_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
-    """Metadata of the catalog table ``{sf_dir}/{name}.parquet`` (a file
-    or a directory), built once per table version from one pass over the
-    parquet footers plus one Spark schema inference, then served from
-    :data:`_TABLE_META`. A miss costs one Spark job; a hit costs only
-    the stat calls that form the version."""
+def _table_version(path: str) -> tuple | None:
+    """(file, mtime_ns, size) of the file, or of every file under the
+    directory, at ``path``; None when it cannot be stat'ed. Rewriting any
+    file in place changes the version even though a directory's own
+    mtime does not change."""
     import os
 
-    path = f"{sf_dir}/{name}.parquet"
     try:
         if os.path.isdir(path):
             files = sorted(
@@ -115,10 +112,22 @@ def _table_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
             files = [path]
         stats = [os.stat(f) for f in files]
     except OSError:
-        return _UNKNOWN_TABLE
-    version = tuple(
+        return None
+    return tuple(
         (f, st.st_mtime_ns, st.st_size) for f, st in zip(files, stats)
     )
+
+
+def _table_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
+    """Metadata of the catalog table ``{sf_dir}/{name}.parquet`` (a file
+    or a directory), built once per table version from one pass over the
+    parquet footers plus one Spark schema inference, then served from
+    :data:`_TABLE_META`. A miss costs one Spark job; a hit costs only
+    the stat calls that form the version."""
+    path = f"{sf_dir}/{name}.parquet"
+    version = _table_version(path)
+    if version is None:
+        return _UNKNOWN_TABLE
     hit = _TABLE_META.get(path)
     if hit is not None and hit[0] == version:
         return hit[1]
@@ -136,7 +145,7 @@ def _table_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
         schema=spark.read.parquet(path).schema,
         row_groups=sum(m.num_row_groups for m in footers),
         rows=sum(m.num_rows for m in footers),
-        bytes=sum(st.st_size for st in stats),
+        bytes=sum(size for _f, _mtime, size in version),
     )
     _TABLE_META[path] = (version, meta)
     return meta
@@ -210,19 +219,16 @@ def _dec(col, scale: int = 2):
 
 def _artifact_tag(sf_dir: str, *tables: str) -> str:
     """Cache tag for derived /tmp artifacts (bucketed tables, CSV
-    exports, partitioned copies): hashes the source PATH and the source
-    files' MTIMES, so regenerated testdata at the same path gets a fresh
-    artifact instead of silently reusing a stale copy."""
+    exports, partitioned copies): hashes the source PATH and each source
+    table's :func:`_table_version`, so regenerated testdata at the same
+    path, or a file rewritten in place inside a directory table, gets a
+    fresh artifact instead of silently reusing a stale copy."""
     import hashlib
-    import os
 
     parts = [sf_dir]
     for t in tables:
-        p = f"{sf_dir}/{t}.parquet"
-        try:
-            parts.append(f"{t}:{os.path.getmtime(p)}")
-        except OSError:
-            parts.append(f"{t}:absent")
+        version = _table_version(f"{sf_dir}/{t}.parquet")
+        parts.append(f"{t}:{'absent' if version is None else version}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
 
 

@@ -2,9 +2,12 @@
 tokenization, quality scoring, language identification, fingerprinting,
 shingling.
 
-Everything here is a pure Catalyst column expression (JVM-side, codegen,
-no Python in the hot path) so it runs at 100 TB without serialization
-overhead. The expression builders return Columns and are shared by the
+Most operators here are pure Catalyst column expressions (JVM-side,
+codegen, no Python in the hot path) so they run at 100 TB without
+serialization overhead. The few with per-row work that array algebra
+does badly (``gopher_repetition``, ``span_corruption_masks``,
+``normalize_unicode``) run as one Arrow-batched Python pass each. The
+expression builders return Columns and are shared by the
 dedup operators (same shingle/hash definitions on both sides of the
 LSH pipeline).
 
@@ -274,99 +277,21 @@ def repetition_ratio(
     )
 
 
-def _sorted_run_stats(arr: Column) -> Column:
-    """Per-row duplicate-run statistics of a SORTED string array:
-    struct(n, dup_cnt, dup_chars, top_chars) where dup_cnt / dup_chars
-    count every occurrence beyond a value's first (the 'duplicated'
-    share) and top_chars = max over distinct values of
-    count·length(value) (characters covered by the heaviest repeated
-    value, all occurrences). All run arithmetic is index algebra over
-    the sorted array — row-local, no explode, no shuffle."""
-    return let_col(
-        arr,
-        lambda a: let_col(
-            # 1-based positions i (2..n) where a[i] == a[i-1]: each is
-            # one beyond-first occurrence
-            F.when(
-                F.size(a) >= 2,
-                F.filter(
-                    # sequence(2, 1) would DESCEND for n < 2 — guarded
-                    F.sequence(F.lit(2), F.size(a)),
-                    lambda i: F.element_at(a, i) == F.element_at(a, i - 1),
-                ),
-            ).otherwise(F.array().cast("array<int>")),
-            lambda dup: F.struct(
-                F.size(a).alias("n"),
-                F.aggregate(
-                    a,
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + F.length(x),
-                ).alias("chars"),
-                F.size(dup).alias("dup_cnt"),
-                F.aggregate(
-                    dup,
-                    F.lit(0).cast("long"),
-                    lambda acc, i: acc + F.length(F.element_at(a, i)),
-                ).alias("dup_chars"),
-                let_col(
-                    # run starts: position 1 plus every inequality edge
-                    F.when(
-                        F.size(a) >= 1,
-                        F.concat(
-                            F.array(F.lit(1)),
-                            F.when(
-                                F.size(a) >= 2,
-                                F.filter(
-                                    F.sequence(F.lit(2), F.size(a)),
-                                    lambda i: F.element_at(a, i)
-                                    != F.element_at(a, i - 1),
-                                ),
-                            ).otherwise(F.array().cast("array<int>")),
-                        ),
-                    ).otherwise(F.array().cast("array<int>")),
-                    lambda starts: F.coalesce(
-                        F.array_max(
-                            F.zip_with(
-                                starts,
-                                # next run's start; the last run ends
-                                # at n+1
-                                F.concat(
-                                    F.slice(
-                                        starts, 2,
-                                        F.greatest(
-                                            F.size(starts) - 1, F.lit(0)
-                                        ),
-                                    ),
-                                    F.array(F.size(a) + 1),
-                                ),
-                                lambda s1, s2: (s2 - s1).cast("long")
-                                * F.length(F.element_at(a, s1)),
-                            )
-                        ),
-                        F.lit(0).cast("long"),
-                    ),
-                ).alias("top_chars"),
-            ),
-        ),
-    )
-
-
 def _gopher_doc_stats(
     text,
     line_sep: str,
     top_ns: tuple[int, ...],
     dup_ns: tuple[int, ...],
 ) -> dict:
-    """Single-document Gopher repetition battery — the Arrow-kernel
-    twin of the expression tier, bit-exact by construction: every
-    fraction is one IEEE division of exact integers, and the integer
-    counts replicate the expression algebra's contracts precisely
-    (trim strips 0x20 only like Spark's ``trim``; the token split uses
-    ASCII ``\\s`` like Java regex; gram identity is the dense token-id
-    sequence — computed progressively in numpy via exact int64 pair
-    packing, r11 — injective to the joined gram string because tokens
-    cannot contain whitespace; gram char length = Σ token lens + (n−1)
-    separator spaces = length of the joined string)."""
+    """Single-document Gopher repetition battery, the per-row worker
+    of :func:`gopher_repetition`. Every fraction is one IEEE division
+    of exact integers, and the integer counts follow the DuckDB
+    oracle's contracts (trim strips 0x20 only like Spark's ``trim``;
+    the token split uses ASCII ``\\s`` like Java regex; gram identity is
+    the dense token-id sequence, injective to the joined gram string
+    because tokens cannot contain whitespace; gram char length =
+    Σ token lens + (n−1) separator spaces = length of the joined
+    string)."""
     import re as _re
     from collections import Counter as _Counter
 
@@ -388,15 +313,12 @@ def _gopher_doc_stats(
     }
     toks = [t for t in ws.split(text.strip(" ")) if t != ""]
     L = len(toks)
-    # r11: vectorized gram counting (guide §4.2). The old kernel built
-    # a Counter of python token-id TUPLES per n (tuple alloc + hash per
-    # position per n — the dominant per-row cost of the battery per
-    # SCALE.md). Gram ids are now assigned PROGRESSIVELY in numpy: the
+    # Gram ids are assigned progressively in numpy, not as Counters of
+    # token tuples (a tuple alloc + hash per position per n): the
     # n-gram id at position i is the dense-unique of the exact pair
     # (id of (n-1)-gram at i, token id at i+n-1) packed into one int64
     # — injective because both components are <= L < L+1, so gram
-    # identity stays EXACT (no hashing anywhere; bit-identical results,
-    # pinned by the differential fuzz vs the independent replica).
+    # identity stays exact with no hashing.
     if L:
         tid_arr = np.unique(np.array(toks, dtype=object),
                             return_inverse=True)[1].astype(np.int64)
@@ -448,21 +370,39 @@ def _gopher_doc_stats(
     return out
 
 
-def _gopher_repetition_arrow(
+def gopher_repetition(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
-    line_sep: str,
-    top_ns: tuple[int, ...],
-    dup_ns: tuple[int, ...],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    line_sep: str = "\n",
+    top_ns: tuple[int, ...] = (2, 3, 4),
+    dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
 ) -> DataFrame:
-    """Arrow-batched tier of :func:`gopher_repetition`: one mapInPandas
-    pass, token-id gram counting in a dict kernel instead of nine
-    interpreted higher-order array sorts per document — same zero-
-    exchange scan-bound shape, several-fold smaller per-row constant
-    (the round-8 judge's advisory on Gopher-battery-heavy curation
-    runs). Bit-exact vs the expression tier (pytest-parametrized fuzz
-    runs BOTH engines against the same DuckDB oracle)."""
+    """The full Gopher repetition battery (Rae et al. 2021 §A.1.2) —
+    the within-document repetition signals beyond ``repetition_ratio``:
+
+    - ``dup_line_frac``: fraction of (trimmed, non-empty) lines that
+      are a repeat of an earlier identical line;
+    - ``dup_line_char_frac``: fraction of line characters inside those
+      repeats (beyond-first occurrences);
+    - ``top_{n}gram_char_frac`` for each n in ``top_ns``: characters
+      covered by the heaviest word n-gram (count × gram length, all
+      occurrences) over the normalized text length — under count ties
+      this takes the maximum char coverage, which is deterministic
+      where "the most frequent n-gram" is not;
+    - ``dup_{n}gram_char_frac`` for each n in ``dup_ns``: characters
+      in beyond-first occurrences of repeated n-grams (overlapping
+      occurrences each count — the standard published approximation).
+
+    Fractions are single divisions of exact integers (bit-identical in
+    any engine); documents with no lines / no n-grams, NULL text
+    included, score 0.
+
+    Scale shape: one Arrow-batched mapInPandas pass with zero
+    exchanges — at 100 TB it parallelizes with the file splits, unlike
+    the explode+groupBy shape (whose shuffle is corpus-token-sized for
+    a per-document metric). Per document the kernel
+    (:func:`_gopher_doc_stats`) counts token-id grams in O(L)."""
     from typing import Iterator as _Iterator
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -487,127 +427,6 @@ def _gopher_repetition_arrow(
             )
 
     return df.select(id_col, text_col).mapInPandas(battery, cols)
-
-
-def gopher_repetition(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    line_sep: str = "\n",
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-    engine: str = "arrow",
-) -> DataFrame:
-    """The full Gopher repetition battery (Rae et al. 2021 §A.1.2) —
-    the within-document repetition signals beyond ``repetition_ratio``:
-
-    - ``dup_line_frac``: fraction of (trimmed, non-empty) lines that
-      are a repeat of an earlier identical line;
-    - ``dup_line_char_frac``: fraction of line characters inside those
-      repeats (beyond-first occurrences);
-    - ``top_{n}gram_char_frac`` for each n in ``top_ns``: characters
-      covered by the heaviest word n-gram (count × gram length, all
-      occurrences) over the normalized text length — under count ties
-      this takes the maximum char coverage, which is deterministic
-      where "the most frequent n-gram" is not;
-    - ``dup_{n}gram_char_frac`` for each n in ``dup_ns``: characters
-      in beyond-first occurrences of repeated n-grams (overlapping
-      occurrences each count — the standard published approximation).
-
-    Fractions are single divisions of exact integers (bit-identical in
-    any engine); documents with no lines / no n-grams score 0.
-
-    Scale shape: the ENTIRE battery is row-local with zero exchanges —
-    at 100 TB it parallelizes with the file splits, unlike the
-    explode+groupBy shape (whose shuffle is corpus-token-sized for a
-    per-document metric). Two tiers, identical values:
-
-    - ``engine="arrow"`` (default): one Arrow-batched mapInPandas pass;
-      gram counting over token-id tuples in a dict kernel — O(L) per
-      doc with a small constant (round-9: cut the battery's per-row
-      cost, the largest scan-side constant in the repo per SCALE.md).
-    - ``engine="expr"``: pure Catalyst array algebra — split, sort,
-      run-length index arithmetic (:func:`_sorted_run_stats`); no
-      Python workers at all, O(L log L) interpreted per row. Keep for
-      environments where Python worker startup dominates tiny inputs
-      or Arrow transfer is undesirable.
-
-    Both tiers are fuzz-pinned bit-exact against the same DuckDB
-    oracle (fractions are single IEEE divisions of exact integer
-    counts)."""
-    if engine == "arrow":
-        return _gopher_repetition_arrow(
-            df, id_col, text_col, line_sep, top_ns, dup_ns
-        )
-    if engine != "expr":
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    import re as _re
-
-    # materialize the token array ONCE (module discipline: every HOF
-    # reference to a raw split() re-tokenizes the row — measured 7×);
-    # every n reads the same bound column, and an n present in both
-    # top_ns and dup_ns gets ONE stats struct serving both fractions
-    ns = sorted(set(top_ns) | set(dup_ns))
-    # coalesce NULL text to '' (same as duplicate_spans/dup_span_apply):
-    # unguarded, a NULL doc's line split and token array are NULL and
-    # every fraction comes back NULL, contradicting the "no lines / no
-    # n-grams score 0" contract (round-8 advisory)
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    lines_arr = F.array_sort(
-        F.filter(
-            F.transform(
-                F.split(txt, _re.escape(line_sep)),
-                lambda x: F.trim(x),
-            ),
-            lambda x: x != "",
-        )
-    )
-    mid = df.select(
-        F.col(id_col),
-        tokens(txt).alias("__toks"),
-        let_col(
-            _sorted_run_stats(lines_arr),
-            lambda s: F.struct(
-                (
-                    s["dup_cnt"].cast("double")
-                    / F.greatest(s["n"], F.lit(1)).cast("double")
-                ).alias("dup_line_frac"),
-                (
-                    s["dup_chars"].cast("double")
-                    / F.greatest(s["chars"], F.lit(1)).cast("double")
-                ).alias("dup_line_char_frac"),
-            ),
-        ).alias("__lines"),
-    )
-    toks = F.col("__toks")
-    mid = mid.select(
-        id_col,
-        "__lines",
-        F.greatest(F.length(F.array_join(toks, " ")), F.lit(1))
-        .cast("double")
-        .alias("__L"),
-        *[
-            _sorted_run_stats(F.array_sort(ngrams_of(toks, n))).alias(
-                f"__g{n}"
-            )
-            for n in ns
-        ],
-    )
-    return mid.select(
-        id_col,
-        F.col("__lines")["dup_line_frac"].alias("dup_line_frac"),
-        F.col("__lines")["dup_line_char_frac"].alias("dup_line_char_frac"),
-        *[
-            (F.col(f"__g{n}")["top_chars"].cast("double") / F.col("__L"))
-            .alias(f"top_{n}gram_char_frac")
-            for n in top_ns
-        ],
-        *[
-            (F.col(f"__g{n}")["dup_chars"].cast("double") / F.col("__L"))
-            .alias(f"dup_{n}gram_char_frac")
-            for n in dup_ns
-        ],
-    )
 
 
 def text_profile(table: ColumnarTable, text_col: str = "text") -> ColumnarTable:
@@ -1523,9 +1342,9 @@ def vocab_coverage_curve(
 
 
 def _span_corruption_doc(doc_id, text, span_len: int, seed_every: int):
-    """Single-document span-corruption kernel — the Arrow tier's
-    per-row worker, O(n) per doc. Same md5-60 arithmetic and island
-    algebra as the expression tier and the DuckDB oracle."""
+    """Single-document span-corruption kernel, the per-row worker of
+    :func:`span_corruption_masks`, O(n) per doc. Same md5-60 arithmetic
+    and island algebra as the DuckDB oracle."""
     import hashlib
     import re as _re
 
@@ -1558,18 +1377,37 @@ def _span_corruption_doc(doc_id, text, span_len: int, seed_every: int):
     return n, sum(msk), " ".join(inp), " ".join(tgt)
 
 
-def _span_corruption_arrow(
+def span_corruption_masks(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
-    span_len: int,
-    seed_every: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    span_len: int = 3,
+    seed_every: int = 20,
 ) -> DataFrame:
-    """Arrow-batched tier of :func:`span_corruption_masks`: one
-    mapInPandas pass, O(n) per document — the expression tier's
-    per-position sentinel indexing is O(n²) in interpreted HOF calls
-    (measured 23.8 s for 5k docs; this tier is the default for the
-    same reason gopher_repetition's kernel is)."""
+    """T5-style span-corruption training targets (Raffel et al. 2020
+    §3.1.4 "replace corrupted spans with sentinel tokens"): a
+    deterministic, seed-free hash decides which token positions START
+    a corrupted span (position ``i`` seeds iff
+    ``md5_60(doc_id:i) % seed_every == 0`` — expected corruption
+    density = span_len/seed_every, the paper's 15% at the defaults),
+    each seed masks ``span_len`` tokens, overlapping/adjacent masked
+    ranges merge, and each merged island is replaced by one numbered
+    sentinel. ``inputs`` carries the visible text with sentinels;
+    ``targets`` carries each sentinel followed by the tokens it hides
+    (the exact T5 target format).
+
+    Determinism is the point: any engine (the DuckDB oracle replays
+    the same md5 arithmetic) produces byte-identical training pairs,
+    so a 100 TB corpus can be re-masked reproducibly without storing
+    the masks.
+
+    Scale shape: one Arrow-batched mapInPandas pass with zero
+    exchanges, O(n) per document (:func:`_span_corruption_doc`).
+
+    Returns (id_col, n_tokens, n_masked, inputs, targets); docs with
+    no seeded position pass through with targets = ''."""
+    if span_len < 1 or seed_every < 1:
+        raise ValueError("span_len and seed_every must be >= 1")
     from typing import Iterator as _Iterator
 
     id_type = df.schema[id_col].dataType.simpleString()
@@ -1591,143 +1429,6 @@ def _span_corruption_arrow(
             })
 
     return df.select(id_col, text_col).mapInPandas(run, schema)
-
-
-def span_corruption_masks(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_len: int = 3,
-    seed_every: int = 20,
-    engine: str = "arrow",
-) -> DataFrame:
-    """T5-style span-corruption training targets (Raffel et al. 2020
-    §3.1.4 "replace corrupted spans with sentinel tokens"): a
-    deterministic, seed-free hash decides which token positions START
-    a corrupted span (position ``i`` seeds iff
-    ``md5_60(doc_id:i) % seed_every == 0`` — expected corruption
-    density = span_len/seed_every, the paper's 15% at the defaults),
-    each seed masks ``span_len`` tokens, overlapping/adjacent masked
-    ranges merge, and each merged island is replaced by one numbered
-    sentinel. ``inputs`` carries the visible text with sentinels;
-    ``targets`` carries each sentinel followed by the tokens it hides
-    (the exact T5 target format).
-
-    Determinism is the point: any engine (the DuckDB oracle replays
-    the same md5 arithmetic) produces byte-identical training pairs,
-    so a 100 TB corpus can be re-masked reproducibly without storing
-    the masks.
-
-    Scale shape: entirely row-local, zero exchanges, two tiers with
-    identical values (the gopher_repetition discipline):
-
-    - ``engine="arrow"`` (default): one Arrow-batched mapInPandas
-      pass, O(n) per document (measured 1× rehearsal: 1.1 s vs the
-      expression tier's 23.8 s for 5k docs);
-    - ``engine="expr"``: pure Catalyst array algebra (sequence /
-      filter / exists / aggregate) — no Python workers, but the
-      per-position sentinel indexing is O(n²) in interpreted HOF
-      calls; keep for tiny inputs or Python-free environments.
-
-    Returns (id_col, n_tokens, n_masked, inputs, targets); docs with
-    no seeded position pass through with targets = ''."""
-    if span_len < 1 or seed_every < 1:
-        raise ValueError("span_len and seed_every must be >= 1")
-    if engine == "arrow":
-        return _span_corruption_arrow(
-            df, id_col, text_col, span_len, seed_every
-        )
-    if engine != "expr":
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
-    # local import: dedup imports from text at module level, so the
-    # reverse edge must stay function-scoped
-    from knime_core_columnar_spark.operators.dedup import base_hash60
-
-    def h(i: Column) -> Column:
-        return base_hash60(
-            F.concat(
-                F.col(id_col).cast("string"), F.lit(":"), i.cast("string")
-            )
-        )
-
-    toks = df.select(
-        F.col(id_col), tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("__w")
-    )
-    n = F.size("__w")
-    idx = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-        F.array().cast("array<int>")
-    )
-    seeds = F.filter(idx, lambda j: h(j) % seed_every == 0)
-    with_cols = toks.select(
-        id_col, "__w", seeds.alias("__seeds"), idx.alias("__idx")
-    )
-    masked = F.transform(
-        F.col("__idx"),
-        lambda i: F.exists(
-            F.col("__seeds"), lambda j: (j <= i) & (i < j + span_len)
-        ),
-    )
-    mid = with_cols.select(id_col, "__w", masked.alias("__m"))
-    # island starts: masked and (first position or previous unmasked);
-    # sentinel index of position i = (# starts at positions <= i) - 1
-    starts = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("__m"), F.lit(1))),
-        lambda i: F.element_at(F.col("__m"), i)
-        & ((i == 1) | ~F.coalesce(
-            F.element_at(F.col("__m"), i - 1), F.lit(False)
-        )),
-    )
-    mid2 = mid.select(
-        id_col, "__w", "__m",
-        F.when(F.size("__m") >= 1, starts)
-        .otherwise(F.array().cast("array<boolean>"))
-        .alias("__s"),
-    )
-
-    def sentinel_of(i: Column) -> Column:
-        # count of starts at positions <= i, minus 1
-        k = F.size(
-            F.filter(
-                F.slice(F.col("__s"), 1, i),
-                lambda b: b,
-            )
-        ) - 1
-        return F.concat(F.lit("<extra_id_"), k.cast("string"), F.lit(">"))
-
-    piece_in = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("__w"), F.lit(1))),
-        lambda i: F.when(
-            ~F.element_at(F.col("__m"), i), F.element_at(F.col("__w"), i)
-        ).when(F.element_at(F.col("__s"), i), sentinel_of(i)).otherwise(
-            F.lit("")
-        ),
-    )
-    piece_tgt = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("__w"), F.lit(1))),
-        lambda i: F.when(
-            ~F.element_at(F.col("__m"), i), F.lit("")
-        ).when(
-            F.element_at(F.col("__s"), i),
-            F.concat(sentinel_of(i), F.lit(" "),
-                     F.element_at(F.col("__w"), i)),
-        ).otherwise(F.element_at(F.col("__w"), i)),
-    )
-
-    def joined(pieces: Column) -> Column:
-        return F.array_join(F.filter(pieces, lambda p: p != ""), " ")
-
-    return mid2.select(
-        F.col(id_col),
-        F.size("__w").cast("long").alias("n_tokens"),
-        F.aggregate(
-            "__m", F.lit(0).cast("long"),
-            lambda acc, b: acc + b.cast("long"),
-        ).alias("n_masked"),
-        F.when(F.size("__w") >= 1, joined(piece_in))
-        .otherwise(F.lit("")).alias("inputs"),
-        F.when(F.size("__w") >= 1, joined(piece_tgt))
-        .otherwise(F.lit("")).alias("targets"),
-    )
 
 
 def _para_lang_preds(text_col: Column | str, sep: str) -> Column:
@@ -1938,8 +1639,8 @@ def fim_transform(
     boundary cases — the paper keeps them).
 
     Scale shape: zero-exchange row-local array algebra — two hashes +
-    three slices per document, O(n) with no per-position work (unlike
-    the span-corruption expression tier, no Arrow tier is needed).
+    three slices per document, O(n) with no per-position work, so it
+    needs no Python kernel.
 
     Returns (id_col, n_tokens, fim_applied, c1, c2, output)."""
     if apply_mod < 1:

@@ -436,7 +436,6 @@ def read_avro_py(
     spark: SparkSession,
     path: str,
     key_columns: Sequence[str] | None = None,
-    distributed: bool | None = None,
 ):
     """Avro container file(s) -> ColumnarTable via the pure-Python decoder.
 
@@ -447,10 +446,7 @@ def read_avro_py(
     """
     from knime_core_columnar_spark.table import ColumnarTable
 
-    if distributed is None:
-        distributed = os.path.isdir(path)
-
-    if not distributed:
+    if not os.path.isdir(path):
         with open(path, "rb") as fh:
             data = fh.read()
         st, rows = _decode_file(data)

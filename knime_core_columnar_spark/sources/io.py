@@ -108,23 +108,20 @@ def read_arrow_ipc(
     spark: SparkSession,
     path: str,
     key_columns: Sequence[str] | None = None,
-    distributed: bool | None = None,
 ) -> ColumnarTable:
     """Arrow IPC file(s) → table.
 
     The reference's native store is Arrow IPC with KNIME footer metadata
-    (ArrowReaderWriterUtils.java:79-103). Small single files take the
-    driver path (pyarrow → Arrow-native createDataFrame). Directories /
-    large inputs take the distributed path: Spark's binaryFile source
-    lists and ships files to executors, each decoded with pyarrow inside
-    mapInPandas — scales to any file count with zero driver involvement.
+    (ArrowReaderWriterUtils.java:79-103). A single file takes the driver
+    path (pyarrow → Arrow-native createDataFrame). A directory takes the
+    distributed path: Spark's binaryFile source lists and ships files to
+    executors, each decoded with pyarrow inside mapInPandas — scales to
+    any file count with zero driver involvement.
     """
     import pyarrow as pa
     import pyarrow.ipc
 
-    if distributed is None:
-        distributed = os.path.isdir(path)
-    if not distributed:
+    if not os.path.isdir(path):
         with pa.memory_map(path) as source:
             table = pa.ipc.open_file(source).read_all()
         return ColumnarTable.from_dataframe(

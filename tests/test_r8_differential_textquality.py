@@ -17,8 +17,6 @@ Deterministic (derandomize=True).
 from __future__ import annotations
 
 import re
-
-import pytest
 from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -48,10 +46,9 @@ def doc(draw, pool, max_lines=6):
     )
 
 
-@pytest.mark.parametrize("engine", ["arrow", "expr"])
 @_SETTINGS
 @given(texts=st.lists(doc(_LINE_POOL), min_size=0, max_size=5))
-def test_gopher_repetition_matches_python_replay(spark_session, texts, engine):
+def test_gopher_repetition_matches_python_replay(spark_session, texts):
     from knime_core_columnar_spark.operators.text import gopher_repetition
 
     df = spark_session.createDataFrame(
@@ -60,7 +57,7 @@ def test_gopher_repetition_matches_python_replay(spark_session, texts, engine):
     got = {
         r["doc_id"]: r.asDict()
         for r in gopher_repetition(df, top_ns=(2, 3),
-                                   dup_ns=(2, 5), engine=engine).collect()
+                                   dup_ns=(2, 5)).collect()
     }
 
     for doc_id, text in enumerate(texts):

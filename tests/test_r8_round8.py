@@ -718,16 +718,16 @@ def _gr(spark, texts, **kw):
     return {r["doc_id"]: r for r in gopher_repetition(df, **kw).collect()}
 
 
-@pytest.mark.parametrize("engine", ["arrow", "expr"])
-def test_gopher_repetition_hand_cases(spark, engine):
+def test_gopher_repetition_hand_cases(spark):
     rows = _gr(
         spark,
         [
             "x\nx\ny",            # 0: one duplicate line
             "a b a b a",          # 1: repeated bigram, no lines
             "",                   # 2: empty -> all zero
+            None,                 # 3: NULL -> all zero
         ],
-        top_ns=(2,), dup_ns=(2,), engine=engine,
+        top_ns=(2,), dup_ns=(2,),
     )
     r0 = rows[0]
     assert r0["dup_line_frac"] == 1 / 3
@@ -740,8 +740,10 @@ def test_gopher_repetition_hand_cases(spark, engine):
     assert r1["top_2gram_char_frac"] == 6 / 9
     assert r1["dup_2gram_char_frac"] == 6 / 9
     assert r1["dup_line_frac"] == 0.0
-    assert all(v == 0.0 for k, v in rows[2].asDict().items()
-               if k != "doc_id")
+    for doc_id in (2, 3):
+        fracs = {k: v for k, v in rows[doc_id].asDict().items()
+                 if k != "doc_id"}
+        assert fracs and all(v == 0.0 for v in fracs.values()), doc_id
 
 
 def test_gopher_repetition_top_ties_take_max_char_coverage(spark):
@@ -756,12 +758,11 @@ def test_gopher_repetition_zero_exchange_plan(spark):
     from knime_core_columnar_spark.operators.text import gopher_repetition
 
     df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    for engine in ("arrow", "expr"):
-        out = gopher_repetition(df, engine=engine)
-        plan = out._sc._jvm.PythonSQLUtils.explainString(
-            out._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" not in plan, engine
+    out = gopher_repetition(df)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
+    )
+    assert "Exchange" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -887,8 +887,7 @@ def _py_span_masks(doc_id, text, span_len, seed_every):
     }
 
 
-@pytest.mark.parametrize("engine", ["arrow", "expr"])
-def test_span_corruption_matches_python_replay(spark, engine):
+def test_span_corruption_matches_python_replay(spark):
     from knime_core_columnar_spark.operators.text import (
         span_corruption_masks,
     )
@@ -905,7 +904,6 @@ def test_span_corruption_matches_python_replay(spark, engine):
             r["doc_id"]: r.asDict()
             for r in span_corruption_masks(
                 df, span_len=span_len, seed_every=seed_every,
-                engine=engine,
             ).collect()
         }
         for did, text in texts:
@@ -947,12 +945,11 @@ def test_span_corruption_zero_exchange_plan(spark):
     )
 
     df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    for engine in ("arrow", "expr"):
-        out = span_corruption_masks(df, engine=engine)
-        plan = out._sc._jvm.PythonSQLUtils.explainString(
-            out._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" not in plan, engine
+    out = span_corruption_masks(df)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
+    )
+    assert "Exchange" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -49,7 +49,7 @@ def test_arrow_ipc_roundtrip(spark, tmp_path):
     outdir = str(tmp_path / "arrow_out")
     paths = write_arrow_ipc(src, outdir)
     assert paths and all(p.endswith(".arrow") for p in paths)
-    back = read_arrow_ipc(spark, outdir, distributed=True)
+    back = read_arrow_ipc(spark, outdir)
     assert back.count() == 100
     orig = {(r["n"], r["x"], r["s"]) for r in src.df.collect()}
     got = {(r["n"], r["x"], r["s"]) for r in back.df.collect()}

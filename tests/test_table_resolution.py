@@ -4,9 +4,10 @@
 of letting Spark infer it on every read; row counts, row-group counts and
 byte sizes come from the same entry. These tests pin that a repeated read
 fires no Spark job, that rewriting a file in place (which leaves a
-directory's own mtime alone) is seen, that the metadata matches the
-footers and the file sizes, and that ``_tw`` widens only large tables
-with too few row groups.
+directory's own mtime alone) is seen by the metadata and by the
+derived-artifact tag, that the metadata matches the footers and the
+file sizes, and that ``_tw`` widens only large tables with too few row
+groups.
 """
 
 from __future__ import annotations
@@ -75,12 +76,15 @@ def _assert_rewrite_seen(spark, sf_dir, name, data_file):
     df = reg._t(spark, sf_dir, name)
     assert df.columns == ["a"]
     assert reg._table_meta(spark, sf_dir, name).rows == 3
+    tag = reg._artifact_tag(sf_dir, name)
 
     _write_v2(data_file)
     df = reg._t(spark, sf_dir, name)
     assert df.columns == ["a", "b"]
     assert reg._table_meta(spark, sf_dir, name).rows == 5
     assert sorted(r.b for r in df.collect()) == ["p", "q", "r", "s", "t"]
+    # derived /tmp artifacts are keyed by the same version
+    assert reg._artifact_tag(sf_dir, name) != tag
 
 
 def test_in_place_rewrite_of_single_file_table(spark, tmp_path):
