@@ -728,21 +728,19 @@ def write_avro(
     directory: str,
     codec: str = "deflate",
     rows_per_block: int = 4096,
-    check_fs: bool = True,
 ) -> list[str]:
     """Distributed Avro export: each Spark partition encodes its own
     ``part-*.avro`` container executor-side (no driver collect), same
     shape as ``write_arrow_ipc``. ``directory`` must be
-    executor-visible — enforced by the :mod:`.fscheck` marker probe
-    unless ``check_fs=False``. Returns written paths."""
-    df = table_or_df.df if hasattr(table_or_df, "df") else table_or_df
-    if check_fs:
-        from .fscheck import assert_executor_visible
-
-        assert_executor_visible(df.sparkSession, directory)
+    executor-visible: each write task first re-reads the
+    :mod:`.fscheck` marker and the export raises ``RuntimeError`` when
+    it cannot. A frame with no rows gets one header-only container from
+    the driver, so the directory reads back as an empty table. Returns
+    written paths."""
     from . import fsio
+    from .fscheck import executor_visible
 
-    fsio.make_out_dir(directory)
+    df = table_or_df.df if hasattr(table_or_df, "df") else table_or_df
     schema_json = df.schema.json()
 
     def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -750,6 +748,7 @@ def write_avro(
 
         from knime_core_columnar_spark.sources import fsio as _fsio
 
+        check_marker()
         st = T.StructType.fromJson(json.loads(schema_json))
         fname = f"part-{uuid.uuid4().hex}.avro"
         n = 0
@@ -768,5 +767,9 @@ def write_avro(
             path = _fsio.write_shard_bytes(directory, fname, data)
             yield pd.DataFrame({"path": [path], "rows": [n]})
 
-    res = df.mapInPandas(write_partition, "path string, rows long").collect()
-    return [r["path"] for r in res]
+    with executor_visible(directory) as check_marker:
+        res = df.mapInPandas(write_partition, "path string, rows long").collect()
+        if res:
+            return [r["path"] for r in res]
+        data = encode_container(df.schema, [], codec=codec)
+        return [fsio.write_shard_bytes(directory, "part-empty.avro", data)]

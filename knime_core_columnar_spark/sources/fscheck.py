@@ -1,42 +1,40 @@
-"""Executor-visibility guard for the executor-local container writers.
+"""Executor-visibility check for the executor-local container writers.
 
 ``write_warc`` / ``write_webdataset`` / ``write_arrow_ipc`` /
-``write_avro`` build each shard in ONE task and emit it with plain
-``open()``/``os.replace`` into ``out_dir``. That is the correct
-distributed shape (no driver collect, shards stream in parallel from
-every executor) — but it silently assumes ``out_dir`` is the SAME
-filesystem on every executor. In local mode that is trivially true;
-on a 1000-executor cluster it is only true for a shared mount
-(NFS/Lustre/FUSE-mounted object store). Without one, each executor
-writes into its own container-local disk and the "export" is
-scattered, partial, and unreadable — data loss no downstream count
-catches.
+``write_avro`` build each shard in ONE task and emit it into
+``out_dir`` from that task (plain ``open()``/``os.replace`` on mount
+paths, the :mod:`.fsio` pyarrow.fs adapter on URIs). That is the
+correct distributed shape (no driver collect, shards stream in
+parallel from every executor) — but it assumes ``out_dir`` is the SAME
+filesystem on every executor. In local mode that is trivially true; on
+a 1000-executor cluster it is only true for a shared mount
+(NFS/Lustre/FUSE-mounted object store) or a URI every worker can
+reach. Without one, each executor writes into its own container-local
+disk and the "export" is scattered, partial, and unreadable — data
+loss no downstream count catches.
 
-This module turns that assumption into a HARD RUNTIME GUARD (round-8
-judge item 3). Before any data work the writer:
+:func:`executor_visible` turns that assumption into a runtime check
+that rides inside the write job itself:
 
-1. resolves URI-scheme paths (``s3://…``, ``gs://…``, ``file://…``,
-   ``hdfs://…``) through the :mod:`.fsio` pyarrow.fs tier (round-10;
-   Python ``open()`` cannot write these, and Spark's Python workers
-   have no py4j bridge to the JVM Hadoop ``FileSystem`` — the
-   Arrow-native clients bundled with pyarrow take that role), raising
-   immediately for schemes pyarrow cannot reach;
-2. writes a uuid marker file into ``out_dir`` from the driver and
-   runs a tiny probe job (``2 × defaultParallelism`` single-element
-   tasks, capped at 64) that re-reads the marker on the executors —
-   through plain ``open()`` for mount paths and through the same
-   pyarrow.fs adapter for URIs (which also validates worker-side
-   credentials/reachability). Any task that cannot read the marker
-   bytes proves ``out_dir`` is not writable distributedly and the
-   writer raises BEFORE shuffling a single record.
+1. on the driver it creates ``out_dir`` through :mod:`.fsio` — schemes
+   pyarrow cannot reach raise ``ValueError`` here, before any job — and
+   writes one uuid marker file into it;
+2. every shard-writing task calls the yielded check before it opens a
+   sink: it re-reads the marker through :func:`.fsio.read_shard_bytes`
+   (plain ``open()`` for mount paths, the same pyarrow.fs adapter the
+   shards use for URIs, which also exercises worker-side credentials
+   and reachability). A missing or different marker raises
+   :class:`OutDirNotVisible` with the executor's exception text;
+3. the driver turns that task failure into a ``RuntimeError`` naming
+   ``out_dir`` and removes the marker in every case.
 
-The probe is a guard, not a proof: task placement is up to the
-scheduler, so a cluster where only SOME executors lack the mount can
-in principle pass (all probe tasks landing on mounted hosts). In
-practice no-shared-mount clusters fail deterministically — every
-non-driver host misses the marker. Cost is one sub-second job;
-writers expose ``check_fs=False`` to skip it for tight loops that
-have already validated the mount.
+The check runs on exactly the executors that write, so a cluster where
+only SOME hosts lack the mount fails whenever a write task lands on one
+of them; a retried task that lands on a host that sees the marker
+writes a visible shard, which is correct output. Shards already
+written by tasks that passed the check may remain after a failure, as
+after any other failed write task. The check costs one small file read
+per shard and no extra Spark job.
 
 No counterpart in the reference: KNIME's writers are single-JVM
 (`BatchStore` on a local path) — the shared-FS question only exists
@@ -45,110 +43,76 @@ because this engine distributes the write.
 
 from __future__ import annotations
 
-import os
+import functools
+import re
 import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
+from . import fsio
+
+MARKER_PREFIX = ".__fsprobe-"
 
 
-def _probe_run(spark, marker: str, token: str, n_tasks: int) -> list[bool]:
-    """Read ``marker`` from ``n_tasks`` executor-side tasks; True where
-    the executor sees the driver's bytes. Module-level (not a closure)
-    so the failure branch is unit-testable without a broken mount."""
-
-    def probe(_it):
-        try:
-            with open(marker, "r", encoding="ascii") as fh:
-                return [fh.read() == token]
-        except OSError:
-            return [False]
-
-    sc = spark.sparkContext
-    return sc.parallelize(range(n_tasks), n_tasks).mapPartitions(probe).collect()
+class OutDirNotVisible(Exception):
+    """A write task could not read the driver's marker in ``out_dir``."""
 
 
-def _probe_run_uri(spark, out_dir: str, fname: str, token: str,
-                   n_tasks: int) -> list[tuple[bool, str]]:
-    """URI tier: re-read the marker on the executors through the same
-    pyarrow.fs adapter the shards will be written with — validates
-    scheme support, network reachability, and credentials from the
-    worker side, not just the driver. Each task returns ``(ok, err)``
-    where ``err`` carries the exception text on failure, so the caller
-    can distinguish a missing native lib / bad credentials / unreachable
-    endpoint from a plain missing marker. The probe is deliberately
-    self-contained (inline pyarrow.fs, no import of this package) so a
-    cluster that has pyarrow but not this package on the workers still
-    gets a truthful reachability answer, not a misleading ImportError."""
-
-    def probe(_it):
-        try:
-            from pyarrow import fs as pafs
-
-            fs, root = pafs.FileSystem.from_uri(out_dir)
-            with fs.open_input_stream(f"{root.rstrip('/')}/{fname}") as f:
-                ok = f.read() == token.encode("ascii")
-            return [(ok, "" if ok else "marker bytes did not match")]
-        except Exception as exc:  # noqa: BLE001 — report, don't mask
-            return [(False, f"{type(exc).__name__}: {exc}")]
-
-    sc = spark.sparkContext
-    return sc.parallelize(range(n_tasks), n_tasks).mapPartitions(probe).collect()
-
-
-def assert_executor_visible(spark, out_dir: str, n_tasks: int | None = None) -> None:
-    """Raise unless ``out_dir`` is writable AND visible from executor
-    tasks — via plain ``open()`` for mount paths, via the
-    :mod:`.fsio` pyarrow.fs adapter for URI destinations (``file://``,
-    ``s3://``, ``gs://``, ``abfs[s]://``, ``hdfs://``). See module
-    docstring for semantics."""
-    from . import fsio
-
-    token = uuid.uuid4().hex
-    if n_tasks is None:
-        n_tasks = min(max(2 * spark.sparkContext.defaultParallelism, 8), 64)
-    if fsio.is_uri(out_dir):
-        fsio.make_out_dir(out_dir)  # raises early on unreachable schemes
-        fname = f".__fsprobe-{token}"
-        fsio.write_shard_bytes(out_dir, fname, token.encode("ascii"))
-        try:
-            seen = _probe_run_uri(spark, out_dir, fname, token, n_tasks)
-            if not seen or not all(ok for ok, _ in seen):
-                bad = sum(1 for ok, _ in seen if not ok)
-                first_err = next((e for ok, e in seen if not ok and e), "")
-                raise RuntimeError(
-                    f"out_dir {out_dir!r} is not reachable from the "
-                    f"executors: {bad}/{len(seen)} probe tasks could not "
-                    "re-read the driver's marker through pyarrow.fs"
-                    + (f" (first executor error: {first_err})" if first_err
-                       else "")
-                    + ". Check that the workers can resolve the scheme "
-                    "(libhdfs for hdfs://) and hold credentials for the "
-                    "bucket; or export via Spark's distributed "
-                    "parquet/orc writers and convert."
-                )
-        finally:
-            fsio.delete_shard(out_dir, fname)
-        return
-    os.makedirs(out_dir, exist_ok=True)
-    marker = os.path.join(out_dir, f".__fsprobe-{token}")
-    with open(marker, "w", encoding="ascii") as fh:
-        fh.write(token)
+def check_marker(out_dir: str, fname: str, token: str) -> None:
+    """Executor side: raise :class:`OutDirNotVisible` unless ``fname``
+    in ``out_dir`` holds the driver's ``token``."""
     try:
-        seen = _probe_run(spark, marker, token, n_tasks)
-        if not seen or not all(seen):
-            bad = sum(1 for s in seen if not s)
-            raise RuntimeError(
-                f"out_dir {out_dir!r} is not visible from the executors: "
-                f"{bad}/{len(seen)} probe tasks could not read the "
-                "driver's marker file. The container writers require a "
-                "shared filesystem (NFS/Lustre/FUSE object-store mount) "
-                "on every executor; without one each executor would "
-                "write shards to its own local disk — scattered, "
-                "partial output. Mount a shared path, write to an "
-                "object-store URI (s3://, gs://, abfs://) served by the "
-                "pyarrow.fs tier, or export via Spark's distributed "
-                "parquet/orc writers and convert."
-            )
+        seen = fsio.read_shard_bytes(out_dir, fname)
+    except (OSError, ValueError) as exc:  # unreadable / unreachable
+        raise OutDirNotVisible(f"{type(exc).__name__}: {exc}") from None
+    if seen != token.encode("ascii"):
+        raise OutDirNotVisible(
+            f"marker {fname} does not hold the driver's token"
+        )
+
+
+def _not_visible(out_dir: str, executor_error: str) -> RuntimeError:
+    if fsio.is_uri(out_dir):
+        return RuntimeError(
+            f"out_dir {out_dir!r} is not reachable from the executors: a "
+            "write task could not re-read the driver's marker through "
+            f"pyarrow.fs (first executor error: {executor_error}). Check "
+            "that the workers can resolve the scheme (libhdfs for "
+            "hdfs://) and hold credentials for the bucket; or export via "
+            "Spark's distributed parquet/orc writers and convert."
+        )
+    return RuntimeError(
+        f"out_dir {out_dir!r} is not visible from the executors: a write "
+        f"task could not read the driver's marker file ({executor_error}). "
+        "The container writers require a shared filesystem "
+        "(NFS/Lustre/FUSE object-store mount) on every executor; without "
+        "one each executor would write shards to its own local disk — "
+        "scattered, partial output. Mount a shared path, write to an "
+        "object-store URI (s3://, gs://, abfs://) served by the pyarrow.fs "
+        "tier, or export via Spark's distributed parquet/orc writers and "
+        "convert."
+    )
+
+
+@contextmanager
+def executor_visible(out_dir: str) -> Iterator[Callable[[], None]]:
+    """Create ``out_dir``, write the marker, and yield the zero-argument
+    check every shard-writing task must call before opening a sink. A
+    task failure raised by that check leaves the block as a
+    ``RuntimeError``; the marker is removed either way. See the module
+    docstring for semantics."""
+    fsio.make_out_dir(out_dir)
+    token = uuid.uuid4().hex
+    fname = f"{MARKER_PREFIX}{token}"
+    fsio.write_shard_bytes(out_dir, fname, token.encode("ascii"))
+    try:
+        yield functools.partial(check_marker, out_dir, fname, token)
+    except Exception as exc:
+        # the task's exception reaches the driver as text inside Spark's
+        # PythonException / Py4JJavaError, not as the original class
+        found = re.search(rf"{OutDirNotVisible.__name__}: (.*)", str(exc))
+        if found is None:
+            raise
+        raise _not_visible(out_dir, found.group(1).strip()) from exc
     finally:
-        try:
-            os.remove(marker)
-        except OSError:
-            pass
+        fsio.delete_shard(out_dir, fname)

@@ -1,23 +1,23 @@
 """Filesystem layer for the executor-local container writers
 (``write_warc`` / ``write_webdataset`` / ``write_avro`` /
-``write_arrow_ipc``) — round-10, judge r9 "What's missing #1".
+``write_arrow_ipc``).
 
 Two tiers, selected per destination:
 
-- **Plain path** (``/mnt/export/...``): the original fast path —
-  executor-side ``open()`` + ``os.replace`` (atomic rename). Requires
-  a shared mount on a multi-node cluster, enforced by the
-  :mod:`.fscheck` marker probe.
+- **Plain path** (``/mnt/export/...``): executor-side ``open()`` +
+  ``os.replace`` (atomic rename). Requires a shared mount on a
+  multi-node cluster, checked by every write task re-reading the
+  driver's :mod:`.fscheck` marker before it opens a sink.
 - **URI path** (``file://``, ``s3://``, ``gs://``, ``abfs[s]://``,
   ``hdfs://``): routed through :mod:`pyarrow.fs` —
   ``FileSystem.from_uri`` dispatches to the Arrow-native S3/GCS/Azure
   clients bundled with the pyarrow wheel (HDFS additionally needs
   libhdfs on the workers). Each shard is still built and emitted by
   exactly ONE executor task — bytes never route through the driver, so
-  export bandwidth scales with the executor count, which is the whole
-  point at 100 TB. The :mod:`.fscheck` probe runs through the same
-  adapter, so unreachable buckets / missing credentials fail loudly
-  BEFORE any data work.
+  export bandwidth scales with the executor count. Unreachable schemes
+  raise on the driver in :func:`make_out_dir`; the write tasks read the
+  :mod:`.fscheck` marker through this same adapter, so missing
+  worker-side credentials fail the write before a task opens a sink.
 
 Atomicity: POSIX-reachable filesystems (local, file://, hdfs://) get
 write-to-temp + rename so concurrent readers never observe a partial
@@ -98,7 +98,7 @@ def write_shard_bytes(out_dir: str, fname: str, data: bytes) -> str:
 
 
 def read_shard_bytes(out_dir: str, fname: str) -> bytes:
-    """Read one shard back through the same adapter (probe + tests)."""
+    """Read one shard back through the same adapter (marker check + tests)."""
     if not is_uri(out_dir):
         with open(os.path.join(out_dir, fname), "rb") as f:
             return f.read()

@@ -180,36 +180,32 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_arrow_ipc(
-    table: ColumnarTable, directory: str, check_fs: bool = True
-) -> list[str]:
+def write_arrow_ipc(table: ColumnarTable, directory: str) -> list[str]:
     """Distributed Arrow IPC export: each partition writes its own
-    ``part-NNNNN.arrow`` file via pyarrow (executor-side, parallel, no
-    driver collect). ``directory`` must be executor-visible — enforced
-    by the :mod:`.fscheck` marker probe unless ``check_fs=False``.
-    Returns the written paths."""
+    ``part-*.arrow`` file via pyarrow (executor-side, parallel, no
+    driver collect). ``directory`` must be executor-visible: each write
+    task first re-reads the :mod:`.fscheck` marker and the export raises
+    ``RuntimeError`` when it cannot. A table with no rows gets one
+    schema-only shard from the driver, so the directory reads back as an
+    empty table. Returns the written paths."""
     import pyarrow as pa
     import pyarrow.ipc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    if check_fs:
-        from .fscheck import assert_executor_visible
-
-        assert_executor_visible(table.df.sparkSession, directory)
     from . import fsio
+    from .fscheck import executor_visible
 
-    fsio.make_out_dir(directory)
     schema_json = table.df.schema.json()
 
     def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import socket
         import uuid
 
         import pyarrow as _pa
         import pyarrow.ipc  # noqa: F401 (sink/new_file below)
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         from knime_core_columnar_spark.sources import fsio as _fsio
 
+        check_marker()
         spark_schema = T.StructType.fromJson(__import__("json").loads(schema_json))
         arrow_schema = to_arrow_schema(spark_schema)
         shard = f"part-{uuid.uuid4().hex}.arrow"
@@ -252,11 +248,17 @@ def write_arrow_ipc(
             sink.close()
             if finalize is not None:
                 finalize()
-            yield pd.DataFrame({"path": [fname], "rows": [n], "host": [socket.gethostname()]})
+            yield pd.DataFrame({"path": [fname], "rows": [n]})
 
-    out_schema = "path string, rows long, host string"
-    res = table.df.mapInPandas(write_partition, out_schema).collect()
-    return [r["path"] for r in res]
+    with executor_visible(directory) as check_marker:
+        res = table.df.mapInPandas(write_partition, "path string, rows long").collect()
+        if res:
+            return [r["path"] for r in res]
+        sink = pa.BufferOutputStream()
+        pa.ipc.new_file(sink, to_arrow_schema(table.df.schema)).close()
+        return [fsio.write_shard_bytes(
+            directory, "part-empty.arrow", sink.getvalue().to_pybytes()
+        )]
 
 
 def create_table(

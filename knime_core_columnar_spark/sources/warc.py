@@ -25,18 +25,17 @@ Spark-first design (the webdataset.py companion):
   records (this repo's default export) pass through with the body as
   the payload and null HTTP columns.
 
-Write-side filesystem contract: the writer's tasks emit shards with
-local ``open()``/``os.replace`` into ``out_dir`` — correct in local
-mode or when ``out_dir`` is a SHARED filesystem mounted on every
-executor (NFS/Lustre/FUSE-mounted object store). This contract is now
-ENFORCED, not assumed: before any data work the writer runs the
-marker-probe guard (:mod:`.fscheck`) and raises when ``out_dir`` is a
-URI-scheme path or not executor-visible, instead of scattering
-partial shards across executor-local disks (``check_fs=False`` skips
-the probe once a mount is validated). Each shard is built in memory
-by one task — pick ``n_files`` so a file stays ~1 GiB
-(``max_file_bytes`` makes the overflow a clear error instead of an
-executor OOM).
+Write-side filesystem contract: the writer's tasks emit shards into
+``out_dir`` themselves (``open()``/``os.replace`` on plain paths, the
+:mod:`.fsio` pyarrow.fs tier on URIs) — correct in local mode, on a
+SHARED filesystem mounted on every executor (NFS/Lustre/FUSE-mounted
+object store), or on a URI every worker can reach. This contract is
+ENFORCED, not assumed: every write task re-reads the driver's
+:mod:`.fscheck` marker before it builds its shard and the export raises
+when it cannot, instead of scattering partial shards across
+executor-local disks. Each shard is built in memory by one task — pick
+``n_files`` so a file stays ~1 GiB (``max_file_bytes`` makes the
+overflow a clear error instead of an executor OOM).
 """
 
 from __future__ import annotations
@@ -106,28 +105,24 @@ def write_warc(
     n_files: int = 8,
     http_wrap: bool = False,
     max_file_bytes: int = 2 << 30,
-    check_fs: bool = True,
 ) -> None:
     """Export (url, content) rows as ``out_dir/part-NNNNN.warc.gz``:
     one gzip member per record (the Common Crawl convention), records
     sorted by url within a file, zeroed gzip mtime — byte-reproducible
     at any input partitioning. Each file is written by exactly one
-    task (groupBy(file) → applyInPandas); ``out_dir`` must be a shared
-    filesystem on a multi-node cluster (see module docstring).
+    task (groupBy(file) → applyInPandas); ``out_dir`` must be visible
+    from every executor, which each write task checks (see module
+    docstring).
     ``http_wrap=True`` nests each payload in an HTTP response message
     (the real Common Crawl record shape). A file group whose
     uncompressed record bytes exceed ``max_file_bytes`` raises with
     sizing guidance instead of OOM-ing the executor."""
+    from .fscheck import executor_visible
+
     key_col = key_col or url_col
-    if check_fs:
-        from .fscheck import assert_executor_visible
-
-        assert_executor_visible(df.sparkSession, out_dir)
-    from . import fsio
-
-    fsio.make_out_dir(out_dir)
 
     def _write_file(pdf: pd.DataFrame) -> pd.DataFrame:
+        check_marker()
         fid = int(pdf["__file"].iloc[0])
         recs = []
         total = 0
@@ -162,13 +157,14 @@ def write_warc(
         return pd.DataFrame({"file": [fid], "n_records": [len(recs)]})
 
     cols = list(dict.fromkeys([url_col, content_col, key_col]))
-    (
-        df.select(*cols)
-        .withColumn("__file", warc_file_of(key_col, n_files))
-        .groupBy("__file")
-        .applyInPandas(_write_file, "file int, n_records long")
-        .collect()
-    )
+    with executor_visible(out_dir) as check_marker:
+        (
+            df.select(*cols)
+            .withColumn("__file", warc_file_of(key_col, n_files))
+            .groupBy("__file")
+            .applyInPandas(_write_file, "file int, n_records long")
+            .collect()
+        )
 
 
 def _split_gzip_members(raw: bytes):

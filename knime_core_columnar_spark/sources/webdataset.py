@@ -22,14 +22,14 @@ The pure-python ``tarfile`` module does the container work (stdlib —
 no environment gate), exactly like the Avro/LZ4 codecs elsewhere in
 sources/.
 
-Write-side filesystem contract: writer tasks emit shards with local
-``open()``/``os.replace`` into ``out_dir`` — correct in local mode or
-when ``out_dir`` is a SHARED filesystem mounted on every executor
-(NFS/Lustre/FUSE-mounted object store). This contract is ENFORCED:
-the writer runs the marker-probe guard (:mod:`.fscheck`) before any
-data work and raises on URI-scheme or non-executor-visible paths
-instead of scattering partial shards (``check_fs=False`` skips the
-probe once a mount is validated). Each shard is built in memory by
+Write-side filesystem contract: writer tasks emit shards into
+``out_dir`` themselves (``open()``/``os.replace`` on plain paths, the
+:mod:`.fsio` pyarrow.fs tier on URIs) — correct in local mode, on a
+SHARED filesystem mounted on every executor (NFS/Lustre/FUSE-mounted
+object store), or on a URI every worker can reach. This contract is
+ENFORCED: every write task re-reads the driver's :mod:`.fscheck` marker
+before it builds its shard and the export raises when it cannot,
+instead of scattering partial shards. Each shard is built in memory by
 one task — size ``n_shards`` so a shard stays ~1 GiB
 (``max_shard_bytes`` turns the overflow into a clear error instead of
 an executor OOM).
@@ -71,29 +71,23 @@ def write_webdataset(
     text_cols: list[str] | None = None,
     binary_cols: list[str] | None = None,
     max_shard_bytes: int = 2 << 30,
-    check_fs: bool = True,
 ) -> None:
     """Export ``df`` as ``out_dir/shard-NNNNN.tar``: for each row, one
     tar member per exported column, named ``{key}.{col}`` (text columns
     utf-8 encoded, binary columns raw). Members are sorted by name and
     carry zeroed metadata, so shard bytes are a pure function of the
-    shard's content. ``out_dir`` must be a shared filesystem on a
-    multi-node cluster — enforced by the :mod:`.fscheck` marker probe
-    unless ``check_fs=False``; a shard whose member bytes exceed
-    ``max_shard_bytes`` raises with sizing guidance instead of
-    OOM-ing the executor."""
+    shard's content. ``out_dir`` must be visible from every executor,
+    which each write task checks (see module docstring); a shard whose
+    member bytes exceed ``max_shard_bytes`` raises with sizing guidance
+    instead of OOM-ing the executor."""
+    from .fscheck import executor_visible
+
     text_cols = text_cols if text_cols is not None else ["text"]
     binary_cols = binary_cols or []
-    if check_fs:
-        from .fscheck import assert_executor_visible
-
-        assert_executor_visible(df.sparkSession, out_dir)
-    from . import fsio
-
-    fsio.make_out_dir(out_dir)
     cols = [key_col, *text_cols, *binary_cols]
 
     def _write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        check_marker()
         shard = int(pdf["__shard"].iloc[0])
         members = []
         total = 0
@@ -134,13 +128,14 @@ def write_webdataset(
              "n_bytes": [len(buf.getvalue())]}
         )
 
-    (
-        df.select(*cols)
-        .withColumn("__shard", shard_of(key_col, n_shards))
-        .groupBy("__shard")
-        .applyInPandas(_write_shard, "shard int, n_samples long, n_bytes long")
-        .collect()  # shard-count rows only — the write is the effect
-    )
+    with executor_visible(out_dir) as check_marker:
+        (
+            df.select(*cols)
+            .withColumn("__shard", shard_of(key_col, n_shards))
+            .groupBy("__shard")
+            .applyInPandas(_write_shard, "shard int, n_samples long, n_bytes long")
+            .collect()  # shard-count rows only — the write is the effect
+        )
 
 
 def read_webdataset(

@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 
@@ -14,6 +15,26 @@ def spark():
     s = get_spark(app_name="tests", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def jobs_fired(spark):
+    """``jobs_fired(fn)`` -> (fn(), number of Spark jobs it fired),
+    counted through a job group."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"jobs-fired-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "jobs fired")
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -81,7 +81,7 @@ def test_warc_roundtrip_adversarial_payloads(spark, tmp_path_factory,
     rows = [(f"{u}#{i}", t) for i, (u, t) in enumerate(rows)]
     out = str(tmp_path_factory.mktemp("warc"))
     df = spark.createDataFrame(rows, "url string, text string")
-    write_warc(df, out, n_files=2, http_wrap=http_wrap, check_fs=False)
+    write_warc(df, out, n_files=2, http_wrap=http_wrap)
 
     got = {
         r["url"]: (r["payload"], r["http_status"], r["http_content_type"])
@@ -163,7 +163,7 @@ def test_webdataset_roundtrip_adversarial_keys_and_bytes(
     out = str(tmp_path_factory.mktemp("wds"))
     df = spark.createDataFrame(rows, "k string, text string, blob binary")
     write_webdataset(df, out, key_col="k", n_shards=2,
-                     binary_cols=["blob"], check_fs=False)
+                     binary_cols=["blob"])
 
     got = {
         (r["key"], r["field"]): bytes(r["content"])

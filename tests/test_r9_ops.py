@@ -637,98 +637,8 @@ def test_drift_monitor_batch_hand_case(spark):
 
 
 # ---------------------------------------------------------------------------
-# fscheck — executor-visibility guard for container writers (judge r8 item 3)
+# container writers through file:// URIs
 # ---------------------------------------------------------------------------
-
-def test_fscheck_rejects_unreachable_uri_scheme(spark, tmp_path):
-    """URI destinations route through the pyarrow.fs tier (round-10);
-    schemes pyarrow cannot reach in this environment (no libhdfs, made-up
-    scheme) still fail loudly BEFORE any data work."""
-    from knime_core_columnar_spark.sources.fscheck import assert_executor_visible
-
-    for bad in ("bogus://bucket/exports", "hdfs://nn:8020/exports"):
-        with pytest.raises(ValueError, match="pyarrow.fs"):
-            assert_executor_visible(spark, bad)
-
-
-def test_fscheck_passes_file_uri_and_cleans_marker(spark, tmp_path):
-    """file:// is a URI the pyarrow.fs tier serves: the guard probes
-    through the same adapter the shards are written with, then removes
-    its marker."""
-    import os
-
-    from knime_core_columnar_spark.sources.fscheck import assert_executor_visible
-
-    out = tmp_path / "uri-exports"
-    assert_executor_visible(spark, f"file://{out}")
-    assert out.is_dir()
-    assert not [f for f in os.listdir(out) if f.startswith(".__fsprobe")]
-
-
-def test_fscheck_passes_shared_fs_and_cleans_marker(spark, tmp_path):
-    import os
-
-    from knime_core_columnar_spark.sources.fscheck import assert_executor_visible
-
-    out = str(tmp_path / "exports")
-    assert_executor_visible(spark, out)  # local[32]: trivially shared
-    assert os.path.isdir(out)
-    assert not [f for f in os.listdir(out) if f.startswith(".__fsprobe")]
-
-
-def test_fscheck_probe_detects_invisible_marker(spark):
-    from knime_core_columnar_spark.sources.fscheck import _probe_run
-
-    seen = _probe_run(spark, "/nonexistent-mount/.__fsprobe-x", "x", 4)
-    assert seen == [False, False, False, False]
-
-
-def test_fscheck_raises_when_probe_fails(spark, tmp_path, monkeypatch):
-    from knime_core_columnar_spark.sources import fscheck
-
-    monkeypatch.setattr(
-        fscheck, "_probe_run", lambda *a, **k: [True, False, True]
-    )
-    with pytest.raises(RuntimeError, match="not visible from the executors"):
-        fscheck.assert_executor_visible(spark, str(tmp_path / "exp"))
-    # marker removed even on the failure path
-    import os
-    assert not [f for f in os.listdir(tmp_path / "exp")
-                if f.startswith(".__fsprobe")]
-
-
-def test_writers_run_guard_and_produce_identical_shards(spark, tmp_path):
-    """check_fs=True (default) and check_fs=False produce byte-identical
-    shards — the guard only gates, never alters the write path."""
-    import os
-
-    from knime_core_columnar_spark.sources.warc import write_warc
-
-    df = spark.createDataFrame(
-        [(f"http://ex.com/{i}", f"doc {i} body") for i in range(20)],
-        "url string, text string",
-    )
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    write_warc(df, a, n_files=2, check_fs=True)
-    write_warc(df, b, n_files=2, check_fs=False)
-    fa = sorted(os.listdir(a))
-    assert fa == sorted(os.listdir(b)) and fa
-    for f in fa:
-        with open(os.path.join(a, f), "rb") as fha, \
-             open(os.path.join(b, f), "rb") as fhb:
-            assert fha.read() == fhb.read(), f
-
-
-def test_writers_reject_unreachable_uri(spark):
-    from knime_core_columnar_spark.sources.avro import write_avro
-    from knime_core_columnar_spark.sources.webdataset import write_webdataset
-
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="pyarrow.fs"):
-        write_webdataset(df, "bogus://bucket/wds")
-    with pytest.raises(ValueError, match="pyarrow.fs"):
-        write_avro(df, "hdfs://nn/av")
-
 
 def test_container_writers_file_uri_byte_identical_shards(spark, tmp_path):
     """Round-10 (judge r9 item 3): every container writer exports
@@ -1187,24 +1097,6 @@ def test_language_mix_zero_exchange_plan(spark):
     assert "Exchange" not in plan and "BatchEvalPython" not in plan
 
 
-def test_fscheck_uri_probe_surfaces_executor_error(spark, tmp_path, monkeypatch):
-    """Round-11 ADVICE: a failing URI probe must carry the executor-side
-    exception text (credentials / scheme / native-lib failures are
-    distinguishable), not a generic 'not reachable'."""
-    from knime_core_columnar_spark.sources import fscheck
-
-    monkeypatch.setattr(
-        fscheck, "_probe_run_uri",
-        lambda *a, **k: [(True, ""), (False, "OSError: AWS access denied")],
-    )
-    with pytest.raises(RuntimeError, match="AWS access denied"):
-        fscheck.assert_executor_visible(spark, f"file://{tmp_path / 'x'}")
-    # marker cleaned up on the failure path too
-    import os
-    assert not [f for f in os.listdir(tmp_path / "x")
-                if f.startswith(".__fsprobe")]
-
-
 def test_arrow_ipc_leaves_no_part_temps(spark, tmp_path):
     """Round-11 ADVICE: both tiers stream to a .part temp and rename on
     close (POSIX-like targets), so a completed export directory holds
@@ -1221,7 +1113,7 @@ def test_arrow_ipc_leaves_no_part_temps(spark, tmp_path):
         key_columns=["i"],
     )
     for dest in (str(tmp_path / "plain"), f"file://{tmp_path / 'uri'}"):
-        paths = write_arrow_ipc(t, dest, check_fs=False)
+        paths = write_arrow_ipc(t, dest)
         assert paths
         local_dir = dest[len("file://"):] if dest.startswith("file://") else dest
         names = os.listdir(local_dir)

@@ -13,7 +13,6 @@ groups.
 from __future__ import annotations
 
 import os
-import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -26,25 +25,12 @@ TABLES = ["customer", "documents", "embeddings", "events", "lineitem",
           "nation", "orders", "part", "region", "supplier"]
 
 
-def _jobs_fired(spark, fn):
-    """(fn(), number of Spark jobs it fired), counted through a job group."""
-    sc = spark.sparkContext
-    group = f"table-resolution-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "table resolution")
-    try:
-        result = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", TABLES)
-def test_repeated_read_fires_no_job(spark, sf_dir, name, monkeypatch):
+def test_repeated_read_fires_no_job(spark, sf_dir, name, monkeypatch,
+                                    jobs_fired):
     monkeypatch.setattr(reg, "_TABLE_META", {})
-    first, miss_jobs = _jobs_fired(spark, lambda: reg._t(spark, sf_dir, name))
-    df, hit_jobs = _jobs_fired(spark, lambda: reg._t(spark, sf_dir, name))
+    first, miss_jobs = jobs_fired(lambda: reg._t(spark, sf_dir, name))
+    df, hit_jobs = jobs_fired(lambda: reg._t(spark, sf_dir, name))
     # the miss infers the schema once; that it shows up proves the
     # counter sees construction-time jobs at all
     assert miss_jobs >= 1
