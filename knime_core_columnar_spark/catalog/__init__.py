@@ -1,54 +1,56 @@
-"""Query catalog package (split from the 9.5k-line catalog.py, round 6).
+"""Query catalog: every implemented operator as a ``(spark, sf_dir) ->
+DataFrame`` callable plus its DuckDB oracle, one module per operator
+family.
 
-THE IMPORT SEQUENCE BELOW IS THE REGISTRATION-ORDER CONTRACT: section
-modules register queries into the shared _registry.QUERIES/_registry.
-ORACLES dicts as they import, and the layout modules reorder those dicts
-IN PLACE, so `queries()` sees exactly the order the old monolith
-produced. Every top-level name of every section is copied into this
-package namespace (tests and tools address `catalog.<anything>`), and
-the reload loop makes `importlib.reload(catalog)` rebuild everything
-from scratch, matching the old single-module reload semantics.
+Importing a family module registers its queries through
+``_registry.query``, which refuses a name registered twice.
+``rotation.rotate_window`` then orders the registry by (evidence round,
+name), so the order of ``QUERIES`` does not depend on which family is
+imported first.
 """
 
 from __future__ import annotations
 
-import importlib
-import sys
+from knime_core_columnar_spark.catalog import (  # noqa: F401 (registration)
+    dedup,
+    formats,
+    relational,
+    retrieval,
+    stats,
+    table_algebra,
+    text,
+    tpch,
+)
+from knime_core_columnar_spark.catalog._registry import (
+    ORACLES,
+    QUERIES,
+    _t,
+    _table_meta,
+)
+from knime_core_columnar_spark.catalog.dedup import SEMDEDUP_ORACLE
+from knime_core_columnar_spark.catalog.rotation import (
+    EVIDENCE,
+    WINDOW_SIZE,
+    rotate_window,
+)
+from knime_core_columnar_spark.catalog.text import (
+    BIGRAM_LM_ORACLE,
+    BPE_ENCODE_MERGES,
+)
+from knime_core_columnar_spark.catalog.tpch import entry_query
 
-_SECTIONS = [
-    "_registry",
-    "core",
-    "llm_text",
-    "tpch_more",
-    "widening_a",
-    "widening_b",
-    "partsupp",
-    "formats_graph",
-    "staged_r5",
-    "staged_r6",
-    "staged_r7",
-    "staged_r8",
-    "staged_r9",
-    "round6_ext",
-    "round7_ext",
-    "round8_ext",
-    "round9_ext",
-    "round10_ext",
-    "round11_ext",
-    # LAST: orders the registry (never-checked first, then greens
-    # oldest-evidence-first) so the driver's 50-slot window is always
-    # the freshness frontier — see rotation.py
-    "rotation",
+__all__ = [
+    "BIGRAM_LM_ORACLE",
+    "BPE_ENCODE_MERGES",
+    "EVIDENCE",
+    "ORACLES",
+    "QUERIES",
+    "SEMDEDUP_ORACLE",
+    "WINDOW_SIZE",
+    "_t",
+    "_table_meta",
+    "entry_query",
+    "rotate_window",
 ]
 
-_pkg = sys.modules[__name__]
-for _name in _SECTIONS:
-    _full = f"{__name__}.{_name}"
-    if _full in sys.modules:
-        _mod = importlib.reload(sys.modules[_full])
-    else:
-        _mod = importlib.import_module(_full)
-    for _k, _v in vars(_mod).items():
-        if not _k.startswith("__"):
-            setattr(_pkg, _k, _v)
-del _pkg, _name, _full, _mod, _k, _v
+rotate_window()

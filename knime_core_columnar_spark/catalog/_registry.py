@@ -18,19 +18,23 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Dict, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from knime_core_columnar_spark.schema import ROW_KEY
-from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None):
+    """Register the decorated callable as catalog query ``name`` (and
+    ``oracle`` as its DuckDB SQL). A name registered twice raises
+    ``ValueError``: which definition won would otherwise depend on the
+    order the family modules are imported in."""
+
     def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"catalog query {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

@@ -1,27 +1,24 @@
-"""Driver-window rotation: one freshness policy, no staging machinery.
+"""Driver-window rotation: one freshness policy.
 
 The driver's correctness gate checks the FIRST 50 entries of
 ``queries()``. ``rotate_window()`` (called once at the end of the
 package import) orders the registry so that window is always:
 
   1. every query with NO driver CORRECTNESS row yet (first-time
-     checks), in registration order;
-  2. then driver-green queries, OLDEST evidence first — so every
-     green row is re-verified on a bounded cadence (the round-6
-     rotation greens had r02-era evidence, four rounds stale; this
-     policy caps staleness mechanically).
+     checks), by name;
+  2. then driver-green queries, OLDEST evidence first and by name
+     within a round — so every green row is re-verified on a bounded
+     cadence.
+
+The name tie-break makes the order a function of the registry's
+contents alone: it does not depend on the order in which the family
+modules register their queries.
 
 EVIDENCE maps query name -> the latest round whose CORRECTNESS_rNN
-file contains a row for it. It is regenerated each round by
+file contains a row for it. It is regenerated by
 ``python tools/update_evidence.py`` (which reads the CORRECTNESS_r*
 files and rewrites the dict below plus the README freshness table).
 Names absent from EVIDENCE are never-checked and go first.
-
-This module replaced the round-4..7 window-choreography scaffolding
-(layout_r4/layout_r5/layout_final, the _R*_STAGED dicts and the
-register_r*_queries gating) after the round-7 flip completed the
-staging program — every implemented query is now registered at
-import and this is the only ordering logic left.
 """
 
 from __future__ import annotations
@@ -137,15 +134,12 @@ EVIDENCE: dict[str, int] = {
 
 
 def rotate_window() -> list[str]:
-    """Reorder QUERIES/ORACLES in place: never-checked first
-    (registration order), then greens by (evidence round, registration
-    order). Returns the resulting window head. In-place clear+update is
-    required — every catalog section module aliases these dict objects,
-    so rebinding would leave stale references."""
-    names = list(QUERIES)
-    order = sorted(
-        names, key=lambda n: (EVIDENCE.get(n, 0), names.index(n))
-    )
+    """Reorder QUERIES/ORACLES in place by (evidence round, name):
+    never-checked first, then greens oldest evidence first. Returns the
+    resulting window head. In-place clear+update is required — the
+    package and its callers alias these dict objects, so rebinding
+    would leave stale references."""
+    order = sorted(QUERIES, key=lambda n: (EVIDENCE.get(n, 0), n))
     q = {n: QUERIES[n] for n in order}
     o = {n: ORACLES[n] for n in order if n in ORACLES}
     QUERIES.clear()
@@ -153,6 +147,3 @@ def rotate_window() -> list[str]:
     ORACLES.clear()
     ORACLES.update(o)
     return order[:WINDOW_SIZE]
-
-
-rotate_window()

@@ -13,7 +13,7 @@ the optimizer — predicates over these still push down).
 Determinism notes for differential testing: transcendentals (ln, exp,
 pow, trig) are libm-dependent in their last ulp across engines; they are
 in the library (full capability) but the oracle-checked catalog queries
-avoid them (see catalog.py rules).
+avoid them (see the catalog/_registry.py rules).
 """
 
 from __future__ import annotations

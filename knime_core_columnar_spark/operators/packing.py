@@ -13,7 +13,7 @@ triples, never the text, and each group is ~rows/n_streams so executor
 memory is bounded by choosing ``n_streams`` ∝ corpus size.
 
 Semantics (mirrored exactly by the recursive-CTE DuckDB oracle in
-catalog.py): within a stream, docs are taken in ascending key order; a
+catalog/text.py): within a stream, docs are taken in ascending key order; a
 doc joins the current pack if the pack's token total stays ≤ capacity,
 else it starts the next pack. A single doc larger than the capacity
 gets a pack of its own (truncation is the trainer's call, not the

@@ -2074,7 +2074,7 @@ def curation_gate_fingerprints(
     streaming admitter (streaming.ops.streaming_curation_admit) all
     call this one function, so the surfaces cannot drift apart.
     Defaults are the corpus-fitted parameters the registered funnel
-    queries pin (see catalog.round10_ext); ``newline_synthesis``
+    queries pin (see catalog.text); ``newline_synthesis``
     rewrites a marker to '.\\n' before the C4 pass because the
     synthetic corpus has no natural newlines — pass None for real
     corpora.

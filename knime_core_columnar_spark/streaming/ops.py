@@ -308,30 +308,13 @@ def build_neardup_index(
     (or write them to parquet) so micro-batches don't recompute them."""
     from knime_core_columnar_spark.operators.dedup import (
         base_hash60,
-        minhash_signature_table,
+        minhash_band_table,
         shingle_rows,
     )
 
-    rows = num_perm // bands
-    sig = minhash_signature_table(corpus, id_col, text_col, num_perm, shingle_n)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("b"),
-            F.md5(
-                F.concat(
-                    F.lit(f"{b}|"),
-                    F.concat_ws(
-                        ",", *[F.col(f"h{b * rows + r}") for r in range(rows)]
-                    ),
-                )
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    band_index = sig.select(
-        F.col(id_col).alias("corpus_id"),
-        F.explode(F.array(*band_structs)).alias("__c"),
-    ).select("corpus_id", F.col("__c.b").alias("__b"), F.col("__c.key").alias("__key"))
+    band_index = minhash_band_table(
+        corpus, id_col, text_col, num_perm, bands, shingle_n
+    ).withColumnRenamed(id_col, "corpus_id")
     profiles = (
         shingle_rows(corpus, id_col, text_col, shingle_n)
         .select(F.col(id_col), base_hash60(F.col("__s")).alias("__h"))

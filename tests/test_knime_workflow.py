@@ -128,7 +128,7 @@ def test_catalog_query_matches_hand_coded_chain(spark):
     csv_dir = None
     # the query materializes its CSV artifact under a deterministic tag;
     # recompute the same path through the catalog helper
-    from knime_core_columnar_spark.catalog.widening_a import _artifact_tag
+    from knime_core_columnar_spark.catalog._registry import _artifact_tag
 
     csv_dir = f"/tmp/kccs_workflow_csv_{_artifact_tag(sf_dir, 'lineitem')}"
     schema = ("l_orderkey long, l_linenumber int, l_returnflag string, "

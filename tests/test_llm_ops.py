@@ -715,8 +715,8 @@ def test_neardup_keep_longest_policy(spark):
     cluster, the member with the most tokens wins; ties go to the
     smallest doc_id; singletons keep themselves."""
     from knime_core_columnar_spark import catalog  # noqa: F401 (registry)
-    from knime_core_columnar_spark.catalog.round10_ext import (
-        _r10x_neardup_keep_longest,
+    from knime_core_columnar_spark.catalog.dedup import (
+        _neardup_keep_longest,
     )
 
     base = ("the quick brown fox jumps over the lazy dog and runs far "
@@ -733,13 +733,13 @@ def test_neardup_keep_longest_policy(spark):
     orig = reg._t
     try:
         reg._t = lambda s, sf, name: df
-        import knime_core_columnar_spark.catalog.round10_ext as r10
+        import knime_core_columnar_spark.catalog.dedup as r10
         r10._t = reg._t
         out = {r["doc_id"]: r for r in
-               _r10x_neardup_keep_longest(spark, "unused").collect()}
+               _neardup_keep_longest(spark, "unused").collect()}
     finally:
         reg._t = orig
-        import knime_core_columnar_spark.catalog.round10_ext as r10
+        import knime_core_columnar_spark.catalog.dedup as r10
         r10._t = orig
     assert out[1]["component"] == out[2]["component"] == out[3]["component"]
     assert not out[1]["keep"]

@@ -1,7 +1,7 @@
 """partsupp TPC-H patterns (q2/q9/q11/q16/q20) with the IN-QUERY
 synthesized partsupp (round-7: /root/testdata ships no partsupp table,
 so both engine and oracle derive it deterministically from part keys +
-the supplier count — see catalog/partsupp.py).
+the supplier count — see catalog/tpch.py).
 
 Two legs:
 1. HAND CASE independent of the SQL replay: the synthesized table must
@@ -60,7 +60,7 @@ def _fixture_partsupp(part_keys, n_supp: int):
 def test_synth_partsupp_matches_python_fixture(spark):
     import pyarrow.parquet as pq
 
-    from knime_core_columnar_spark.catalog.partsupp import _synth_partsupp
+    from knime_core_columnar_spark.catalog.tpch import _synth_partsupp
 
     part_keys = pq.read_table(
         f"{SF}/part.parquet", columns=["p_partkey"]
@@ -78,7 +78,7 @@ def test_synth_partsupp_matches_python_fixture(spark):
 def test_synth_partsupp_no_shuffle(spark):
     """The derived dimension must be one codegen projection over part —
     no Exchange, no join beyond the broadcast 2-row literal frame."""
-    from knime_core_columnar_spark.catalog.partsupp import _synth_partsupp
+    from knime_core_columnar_spark.catalog.tpch import _synth_partsupp
 
     plan = spark._jvm.PythonSQLUtils.explainString(
         _synth_partsupp(spark, SF)._jdf.queryExecution(), "formatted"

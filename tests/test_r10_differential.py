@@ -131,7 +131,7 @@ def test_training_pipeline_differential(spark_session, texts):
     want_pdf = con.execute(
         catalog.ORACLES["training_pipeline_e2e"]).df()
 
-    import knime_core_columnar_spark.catalog.round10_ext as r10
+    import knime_core_columnar_spark.catalog.table_algebra as r10
 
     d = _docs_df(spark_session, rows)
     # rebuild the query body over the in-memory docs (the registered
@@ -175,7 +175,7 @@ def test_url_family_differential(spark_session, ids):
     id, so the id IS the fuzz surface: every host/port/query/fragment
     variant combination gets drawn)."""
     from knime_core_columnar_spark import catalog
-    from knime_core_columnar_spark.catalog.round10_ext import _synth_url
+    from knime_core_columnar_spark.catalog.dedup import _synth_url
     from knime_core_columnar_spark.operators.urls import (
         domain_rollup,
         url_dedup,

@@ -446,12 +446,15 @@ def test_r8_section_registered():
 
 def test_window_head_is_freshness_frontier():
     """Round-7 flat registry: the driver window (first 50 names) is the
-    freshness frontier — every never-checked query first (registration
-    order), then the oldest-evidence greens. Deterministic under
-    re-rotation."""
+    freshness frontier — every never-checked query first, then the
+    oldest-evidence greens, by name within each evidence round.
+    Deterministic under re-rotation."""
     from knime_core_columnar_spark import catalog
 
     names = list(catalog.QUERIES)
+    assert names == sorted(
+        names, key=lambda n: (catalog.EVIDENCE.get(n, 0), n)
+    )
     head = names[:catalog.WINDOW_SIZE]
     never = [n for n in names if n not in catalog.EVIDENCE]
     # all never-checked names precede every green
