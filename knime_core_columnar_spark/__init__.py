@@ -26,9 +26,18 @@ collection in any operator, Pandas UDFs only where built-ins cannot
 express the semantics.
 """
 
+import sys
+
 from knime_core_columnar_spark.schema import ROW_KEY
 from knime_core_columnar_spark.session import get_spark
 from knime_core_columnar_spark.table import ColumnarTable
 
 __all__ = ["ColumnarTable", "ROW_KEY", "get_spark"]
 __version__ = "0.1.0"
+
+if "pyspark.worker" in sys.modules:
+    # inside a Spark Python worker: stop every later task from re-parsing
+    # each zip archive on sys.path (see pyworker)
+    from knime_core_columnar_spark import pyworker
+
+    pyworker.install()

@@ -104,6 +104,20 @@ def read_avro(
     return ColumnarTable.from_dataframe(df, key_columns=key_columns)
 
 
+def _decode_arrow_ipc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: every record batch of every Arrow IPC file in
+    the ``content`` column. Module-level, so it is pickled by reference
+    and unpickling it imports the engine in the Python worker."""
+    import pyarrow as pa
+    import pyarrow.ipc  # noqa: F401 (open_file below)
+
+    for pdf in batches:
+        for raw in pdf["content"]:
+            reader = pa.ipc.open_file(pa.BufferReader(bytes(raw)))
+            for i in range(reader.num_record_batches):
+                yield reader.get_batch(i).to_pandas()
+
+
 def read_arrow_ipc(
     spark: SparkSession,
     path: str,
@@ -113,10 +127,12 @@ def read_arrow_ipc(
 
     The reference's native store is Arrow IPC with KNIME footer metadata
     (ArrowReaderWriterUtils.java:79-103). A single file takes the driver
-    path (pyarrow → Arrow-native createDataFrame). A directory takes the
-    distributed path: Spark's binaryFile source lists and ships files to
-    executors, each decoded with pyarrow inside mapInPandas — scales to
-    any file count with zero driver involvement.
+    path (pyarrow → Arrow-native createDataFrame, no pandas in between, so
+    a nullable int64 stays bigint). A directory takes the distributed
+    path: Spark's binaryFile source lists and ships files to executors,
+    each decoded by :func:`_decode_arrow_ipc` inside mapInPandas — scales
+    to any file count with zero driver involvement. Both paths map the
+    Arrow schema to the same Spark schema.
     """
     import pyarrow as pa
     import pyarrow.ipc
@@ -125,7 +141,7 @@ def read_arrow_ipc(
         with pa.memory_map(path) as source:
             table = pa.ipc.open_file(source).read_all()
         return ColumnarTable.from_dataframe(
-            spark.createDataFrame(table.to_pandas()), key_columns=key_columns
+            spark.createDataFrame(table), key_columns=key_columns
         )
 
     sample = None
@@ -144,13 +160,6 @@ def read_arrow_ipc(
         arrow_schema = pa.ipc.open_file(source).schema
     spark_schema = from_arrow_schema(arrow_schema)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for raw in pdf["content"]:
-                reader = pa.ipc.open_file(pa.BufferReader(bytes(raw)))
-                for i in range(reader.num_record_batches):
-                    yield reader.get_batch(i).to_pandas()
-
     # Hadoop glob alternation covers both extensions — a single '*.arrow'
     # filter silently skipped .ipc files the sample scan had accepted.
     files_df = (
@@ -158,7 +167,7 @@ def read_arrow_ipc(
         .option("pathGlobFilter", "*.{arrow,ipc}")
         .load(path)
     )
-    df = files_df.select("content").mapInPandas(decode, spark_schema)
+    df = files_df.select("content").mapInPandas(_decode_arrow_ipc, spark_schema)
     return ColumnarTable.from_dataframe(df, key_columns=key_columns)
 
 

@@ -758,9 +758,15 @@ class ColumnarTable:
     def materialize(self, path: str, mode: str = "error") -> "ColumnarTable":
         """Execute the plan into a stored Parquet table and return a fresh
         source over it — ColumnarVirtualTableMaterializer.java:86-150.
-        Parquet row groups ≅ the reference's ~64 MiB Arrow batches."""
+        Parquet row groups ≅ the reference's ~64 MiB Arrow batches.
+        After ``error`` or ``overwrite`` the files are this frame's, so the
+        read-back takes its schema instead of inferring it (one Spark job
+        less); after ``append`` or ``ignore`` they may hold other data."""
         self._df.write.mode(mode).parquet(path)
-        return ColumnarTable(self._df.sparkSession.read.parquet(path))
+        reader = self._df.sparkSession.read
+        if mode in ("error", "errorifexists", "overwrite"):
+            reader = reader.schema(self._df.schema)
+        return ColumnarTable(reader.parquet(path))
 
     def cache(self) -> "ColumnarTable":
         """Pin outputs for reuse — the reference's output cache

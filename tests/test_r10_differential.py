@@ -131,8 +131,6 @@ def test_training_pipeline_differential(spark_session, texts):
     want_pdf = con.execute(
         catalog.ORACLES["training_pipeline_e2e"]).df()
 
-    import knime_core_columnar_spark.catalog.table_algebra as r10
-
     d = _docs_df(spark_session, rows)
     # rebuild the query body over the in-memory docs (the registered
     # callable reads parquet; the stages are identical)

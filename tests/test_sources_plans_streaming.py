@@ -69,6 +69,33 @@ def test_arrow_ipc_single_file(spark, tmp_path):
     assert t.count() == 3
 
 
+def test_arrow_ipc_file_and_directory_tiers_agree(spark, tmp_path):
+    """The single-file (driver) and directory (distributed) tiers return
+    the same dtypes and rows: a nullable int64 stays bigint on both."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.ipc
+
+    table = pa.table({
+        "id": pa.array([1, 2, 3], pa.int64()),
+        "n": pa.array([7, None, -1], pa.int64()),
+        "ts": pa.array([datetime.datetime(2020, 1, 1, 12), None,
+                        datetime.datetime(1999, 12, 31, 23, 59, 59, 123456)],
+                       pa.timestamp("us")),
+    })
+    single = str(tmp_path / "one.arrow")
+    (tmp_path / "dir").mkdir()
+    for f in (single, str(tmp_path / "dir" / "part-0.arrow")):
+        with pa.OSFile(f, "wb") as sink, pa.ipc.new_file(sink, table.schema) as w:
+            w.write_table(table)
+    a = read_arrow_ipc(spark, single, key_columns=["id"]).df
+    b = read_arrow_ipc(spark, str(tmp_path / "dir"), key_columns=["id"]).df
+    assert a.dtypes == b.dtypes
+    assert dict(a.dtypes)["n"] == "bigint"
+    assert sorted(a.collect()) == sorted(b.collect())
+
+
 def test_create_table_checks_and_domains(spark):
     t = create_table(
         spark,

@@ -224,3 +224,24 @@ def test_check_duplicate_keys_ok(small):
 def test_materialize_roundtrip(tmp_path, small):
     t = small.materialize(str(tmp_path / "mat.parquet"))
     assert t.count() == 10 and t.df.columns[0] == ROW_KEY
+
+
+@pytest.mark.parametrize("mode", ["error", "overwrite"])
+def test_materialize_reads_back_without_inference(spark, tmp_path, small,
+                                                  jobs_fired, mode):
+    """After error/overwrite the read-back takes the frame's schema: the
+    materialization fires the write's jobs and no schema-inference job."""
+    _, write_jobs = jobs_fired(
+        lambda: small.df.write.mode(mode).parquet(str(tmp_path / "w.parquet")))
+    path = str(tmp_path / "mat.parquet")
+    t, jobs = jobs_fired(lambda: small.materialize(path, mode))
+    assert jobs == write_jobs
+    assert t.df.schema == spark.read.parquet(path).schema
+    assert sorted(t.df.collect()) == sorted(small.df.collect())
+
+
+def test_materialize_append_reads_every_file(tmp_path, small):
+    path = str(tmp_path / "mat.parquet")
+    small.materialize(path)
+    t = small.materialize(path, "append")
+    assert t.count() == 20
