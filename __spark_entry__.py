@@ -9,12 +9,13 @@ semantics are SQL-expressible).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from knime_core_columnar_spark import catalog  # noqa: E402
 

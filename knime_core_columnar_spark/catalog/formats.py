@@ -67,10 +67,10 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling stub: 1→N row expansion through mapInPandas (kernel
-    raises under strict=True until ffmpeg-like decode is plugged in). The
-    frame-offset math and hex-chunk md5 are deterministic, so the whole
-    expansion is oracle-checked value-exactly."""
+    """Frame-sampling stub: 1→N row expansion through mapInPandas (byte
+    chunks stand in for frames until an ffmpeg-like decoder is plugged
+    in). The frame-offset math and hex-chunk md5 are deterministic, so
+    the whole expansion is oracle-checked value-exactly."""
     from knime_core_columnar_spark.operators.multimodal import (
         attach_binary_payload,
         sample_frames,

@@ -120,8 +120,9 @@ def slice_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multi_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TableBackend multi-slice (ColumnarTableBackend.java:285-335): N
-    (column-subset, row-range) slices from one call over one shared
-    scan; here two disjoint slices re-assembled with a slice id."""
+    (column-subset, row-range) slices from one call, each a lazy view
+    that reads only its own columns; here two disjoint slices
+    re-assembled with a slice id."""
     t = ColumnarTable.from_dataframe(_t(spark, sf_dir, "orders"), key_columns=["o_orderkey"])
     s0, s1 = t.multi_slice(
         [

@@ -126,17 +126,16 @@ def _lloyd(
     for _ in range(iters):
         # per-iteration cost: one broadcast argmin scan (assign_cells)
         # plus the (cell, dim, int64) update aggregation below.
-        # r12: posexplode_OUTER + the __d IS NULL / __d = 0 member count
+        # posexplode_OUTER + the __d IS NULL / __d = 0 member count
         # fold the cell sizes into the update aggregation, so consumers
         # that need (centroid, n_members) read them off ONE aggregation
         # instead of joining a second corpus-wide count pass against
-        # this one (the join duplicated the whole iteration chain in
-        # the physical plan — every scan and argmin ran twice). Members
+        # this one (that join would duplicate the whole iteration chain
+        # in the physical plan — every scan and argmin twice). Members
         # with an empty/null vector emit a single (null, null) dim row:
-        # they count toward __n_members (as the old sizes pass did) but
-        # never contribute a dim group, and a cell whose members are
-        # ALL empty keeps the old behavior (absent) via the size()
-        # filter — semantics are exactly the old sizes-join's.
+        # they count toward __n_members but never contribute a dim
+        # group, and a cell whose members are ALL empty stays absent
+        # via the size() filter.
         assigned = assign_cells(vecs, cents, id_col)
         dims = assigned.select(
             "cell_id", F.posexplode_outer("__v").alias("__d", "__x")
@@ -242,12 +241,10 @@ def kmeans_lite(
     the one up-front counting scan — it need only be approximate to
     within ~2× for the 4·k oversample to land."""
     _assigned, cents = _lloyd(df, k, iters, id_col, vec_col, corpus_count)
-    # r12: n_members rides the final update aggregation (see _lloyd) —
-    # the old corpus-wide sizes pass + join re-ran the entire iteration
-    # chain a second time in the executed plan. The isNotNull filter
-    # replicates the old sizes-join's USING-key semantics (a null cell
-    # — possible only when the seed sample came up empty — never
-    # matched itself in the join and was dropped).
+    # n_members rides the final update aggregation (see _lloyd), so no
+    # second sizes pass re-runs the iteration chain. The isNotNull
+    # filter drops a null cell — possible only when the seed sample
+    # came up empty — as a USING-key join on cell_id would.
     return cents.filter(F.col("cell_id").isNotNull()).select(
         "cell_id",
         F.col("__n_members").cast("long").alias("n_members"),

@@ -137,7 +137,7 @@ def exact_dedup(table: ColumnarTable, text_col: str = "text") -> ColumnarTable:
     # null-safe key: md5(NULL) is NULL, and a null key never matches in
     # the equi-join — without the coalesce every NULL-text row VANISHES
     # instead of deduping to one survivor (the Window this replaced, and
-    # the SQL oracle's PARTITION BY, both group NULLs; round-10 review)
+    # the SQL oracle's PARTITION BY, both group NULLs)
     df = table.df.withColumn(
         "__fp", F.coalesce(fingerprint(text_col), F.lit("__NULL__"))
     )
@@ -281,12 +281,19 @@ def minhash_signature_table(
     # per-(doc, partition) combine (explode is row-local, so every
     # shingle of a doc is already in one partition).
     sh = shingle_rows(df, id_col, text_col, shingle_n, distinct=False)
-    base = sh.select(id_col, (base_hash60(F.col("__s")) % MINHASH_P).alias("__h0"))
+    return _minhash_minima(sh, id_col, num_perm)
+
+
+def _minhash_minima(shingles: DataFrame, key: str, num_perm: int) -> DataFrame:
+    """(key, __s) shingle rows -> (key, h0..h{num_perm-1}): base hash,
+    the per-permutation hashes in one flat projection, and their minima
+    in ONE hash aggregation on ``key``."""
+    base = shingles.select(key, (base_hash60(F.col("__s")) % MINHASH_P).alias("__h0"))
     hashed = base.select(
-        id_col,
+        key,
         *[perm_hash(F.col("__h0"), i).alias(f"h{i}") for i in range(num_perm)],
     )
-    return hashed.groupBy(id_col).agg(
+    return hashed.groupBy(key).agg(
         *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_perm)]
     )
 
@@ -340,11 +347,11 @@ def minhash_lsh_candidates(
     in-bucket self-join → distinct pairs. The only shuffled payload is
     (id, band_key); document text never moves.
 
-    r12: the band table is lazily localCheckpoint-ed before the
-    self-join — the executed plan showed ReusedExchange NEVER fired
-    across the join's two sides (0 reuses, 2 parquet scans), so the
+    The band table is lazily localCheckpoint-ed before the self-join:
+    the executed plan shows ReusedExchange does NOT fire across the
+    join's two sides (0 reuses, 2 parquet scans), so without it the
     signature pass (shingle explode + num_perm min-hash aggregation,
-    the compute-heavy stage of the whole near-dup family) ran TWICE
+    the compute-heavy stage of the whole near-dup family) runs TWICE
     per call. The checkpoint materializes the (id, band, key) rows —
     exactly the index incremental_dedup_admit persists — once, and
     both join sides read it."""
@@ -597,9 +604,9 @@ def simhash_near_pairs(
             ])
         ).alias("__c"),
     ).select(id_col, "__sim", "__c.band", "__c.chunk")
-    # r12: same ReusedExchange gap as minhash_lsh_candidates — without
-    # the checkpoint the per-token md5 signature pass ran twice (once
-    # per self-join side; executed plan showed 0 reuses, 2 scans).
+    # same ReusedExchange gap as minhash_lsh_candidates — without the
+    # checkpoint the per-token md5 signature pass runs twice (once per
+    # self-join side; the executed plan shows 0 reuses, 2 scans).
     chunks = chunks.localCheckpoint(eager=False)
     a, b = chunks.alias("a"), chunks.alias("b")
     return (
@@ -661,7 +668,7 @@ def connected_components(
     ).unionByName(
         edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
     ).localCheckpoint(eager=False)
-    # r11: seed labels at min(node, min neighbor) — the node-distinct
+    # seed labels at min(node, min neighbor) — the node-distinct
     # pass was a groupBy on the same (src) shuffle anyway, so folding
     # min(dst) into it runs propagation round 1 for free: one fewer
     # BSP round (join + aggregate + checkpoint + probe) on every call.
@@ -683,10 +690,10 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # r12: every checkpoint in the loop is LAZY and the convergence
+        # every checkpoint in the loop is LAZY and the convergence
         # count is the action that materializes it — ONE driver action
-        # per superstep (the eager checkpoint + separate probe count
-        # was 2, plus a third for the pointer-doubling hop). The lazy
+        # per superstep (an eager checkpoint + separate probe count
+        # would be 2, plus a third for the pointer-doubling hop). The lazy
         # checkpoint still truncates the logical plan at build time
         # (the returned frame wraps a LogicalRDD), and the count's
         # filter cannot prune columns through that RDD boundary, so the
@@ -952,10 +959,10 @@ def duplicate_spans(
     (including short docs — their span is the whole text) yields at
     least one span. Empty/NULL/whitespace-only docs yield NO tokens,
     hence no anchors, and are ABSENT from the profile — the same
-    contract as the shingle family for sub-``n``-token docs (the old
-    forced-anchor fallback made every empty doc a "duplicate" of every
-    other empty doc via the shared '' span, a meaningless signal the
-    round-8 advisory flagged).
+    contract as the shingle family for sub-``n``-token docs (a
+    forced-anchor fallback would make every empty doc a "duplicate" of
+    every other empty doc via the shared '' span, a meaningless
+    signal).
 
     Returns (id_col, n_spans, n_dup_spans, dup_ratio) per input doc;
     dup_ratio is a single IEEE division (engine-exact, no rounding).
@@ -1118,14 +1125,14 @@ def dup_span_apply(
     The rebuild joins cut spans back to the corpus id-keyed and drops
     tokens with a per-row array filter (no explode of the corpus).
 
-    Round-10 (judge r9 item 7): the gram stream is materialized ONCE
-    via a lazy localCheckpoint — it feeds both the multiplicity/winner
-    aggregation and the loser join, and without materialization the
-    token-volume gram emission re-executed per consumer. Measured: 2×
-    end-to-end at sf0.1 (4.5 → 2.25 s), ~20%% at the 100× rehearsal
-    (34 → 22 s). Two Arrow kernels were tried for the same item and
-    REJECTED on measurement: (a) Python gram emission lost to the JVM
-    HOF tier (codegen + no Arrow transfer of the exploded stream);
+    The gram stream is materialized ONCE via a lazy localCheckpoint — it
+    feeds both the multiplicity/winner aggregation and the loser join,
+    and without materialization the token-volume gram emission
+    re-executes per consumer. Measured: 2× end-to-end at sf0.1
+    (4.5 → 2.25 s), ~20% at the 100× rehearsal (34 → 22 s). Two Arrow
+    kernels were tried for the same item and REJECTED on measurement:
+    (a) Python gram emission lost to the JVM HOF tier (codegen + no
+    Arrow transfer of the exploded stream);
     (b) an Arrow island-merge/rebuild kernel — O(n) C-speed lists
     replacing the exists() filter — tied at sf0.1 and LOST at 100×
     (47.7 vs 29.0 s; shipping 500k docs' text through Arrow + a Python
@@ -1405,16 +1412,7 @@ def minhash_group_signatures(
     Returns (group_col, h0..h{num_perm-1})."""
     sh = shingle_rows(df.select(id_col, text_col), id_col, text_col, shingle_n)
     grouped = sh.join(df.select(id_col, group_col), id_col)
-    base = grouped.select(
-        group_col, (base_hash60(F.col("__s")) % MINHASH_P).alias("__h0")
-    )
-    hashed = base.select(
-        group_col,
-        *[perm_hash(F.col("__h0"), i).alias(f"h{i}") for i in range(num_perm)],
-    )
-    return hashed.groupBy(group_col).agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_perm)]
-    )
+    return _minhash_minima(grouped, group_col, num_perm)
 
 
 def group_signature_matches(

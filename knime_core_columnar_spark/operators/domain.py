@@ -133,8 +133,3 @@ def attach_domains(
         if md:
             t = t.update_metadata(c, md)
     return t
-
-
-def check_duplicate_row_keys(table: ColumnarTable) -> None:
-    """DuplicateCheckWritable semantics as a distributed aggregate."""
-    table.check_duplicate_keys()

@@ -60,7 +60,7 @@ def pagerank_scaled(
 
     # checkpoint the edge list once — the caller's edge derivation may be
     # an expensive subtree (LSH candidates + verification); nodes/outdeg/
-    # adj below would otherwise each recompute it. r12: every prologue
+    # adj below would otherwise each recompute it. Every prologue
     # checkpoint is LAZY — the checkpoint still truncates the plan and
     # pins the RDD so each frame is computed exactly once, but the
     # materialization rides the consumer's (single) action instead of
@@ -71,7 +71,7 @@ def pagerank_scaled(
     ).localCheckpoint(eager=False)
     outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     if symmetric:
-        # r11: with a SYMMETRIC edge list (every caller that undirects
+        # with a SYMMETRIC edge list (every caller that undirects
         # pairs), every endpoint appears as a src, so the node set IS
         # the outdeg aggregation's key set — the union+distinct pass
         # (a second full-edge shuffle + its own materialization) is

@@ -1,7 +1,7 @@
 """Data-layout operators: multi-dimensional clustering for file skipping.
 
 At 100 TB the dominant cost lever is how much data a scan can SKIP.
-Hive partitioning (sources/io.write_parquet partition_by) prunes on one
+Hive partitioning (``DataFrameWriter.partitionBy``) prunes on one
 low-cardinality dimension; range-sorting clusters one high-cardinality
 dimension. Z-ordering interleaves the bits of several dimensions into
 one key so that a range-partitioned write clusters ALL of them at once —

@@ -1,8 +1,8 @@
-"""Real PNG pixel tier — no imaging library required (round-11 stretch,
-judge r10 item 8: the container has no PIL/cv2, but PNG itself needs
-only DEFLATE + the five scanline filters, both fully specified in the
-public PNG spec (RFC 2083 / W3C PNG 1.2) and implementable with stdlib
-``zlib`` + numpy).
+"""Real PNG pixel tier — no imaging library required (the engine
+ships no PIL/cv2, but PNG itself needs only DEFLATE + the five
+scanline filters, both fully specified in the public PNG spec
+(RFC 2083 / W3C PNG 1.2) and implementable with stdlib ``zlib`` +
+numpy).
 
 This closes the last stubbed gap in the multimodal tier for ONE real
 format: ``decode_image_features`` (multimodal.py) stays the
@@ -191,9 +191,8 @@ def png_pixel_stats(
     for mean/variance downstream with no float reduction inside the
     kernel, so results are bit-stable and oracle-hashable. One
     zero-exchange Arrow-batched scan; NULL payloads yield NULL stats
-    rows (channel -1), undecodable payloads raise (loud, per the
-    multimodal tier's strict contract — this decoder has no fake
-    fallback)."""
+    rows (channel -1), undecodable payloads raise (loud — unlike the
+    multimodal stubs, this decoder has no fake fallback)."""
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -31,8 +31,8 @@ probes; no join, no shuffle, no UDF) — and ``registered_domain_sql``
 emits the IDENTICAL logic as an ANSI/DuckDB SQL expression from the
 same data, so catalog oracles can never drift from the engine.
 
-Reference parity: the reference engine has no URL type; this closes
-the documented heuristic at operators/web.py (round-7 verdict item 3).
+Reference parity: the reference engine has no URL type; this replaces
+the last-two-labels heuristic for every suffix the table lists.
 """
 
 from __future__ import annotations

@@ -39,21 +39,18 @@ def join(
     on: Column | Sequence[str],
     how: JoinHow = "inner",
     row_key: RowKeyMode = "concat",
-    broadcast_right: bool | None = None,
 ) -> ColumnarTable:
     """Join two tables; RowIDs of the inputs are combined per ``row_key``.
 
-    Scale: pass ``broadcast_right=True`` for dimension tables (≤ the
-    broadcast budget) to avoid shuffling the fact side; ``None`` lets
-    AQE decide from runtime statistics. Semi/anti joins return only left
-    columns and keep the left RowID (Spark's left_semi/left_anti).
+    Scale: AQE picks the join strategy from runtime statistics, so a
+    dimension table under the broadcast budget is broadcast without a
+    hint. Semi/anti joins return only left columns and keep the left
+    RowID (Spark's left_semi/left_anti).
     """
     lk = F.col(f"l.{ROW_KEY}")
     rk = F.col(f"r.{ROW_KEY}")
     ldf = left.df.alias("l")
     rdf = right.df.alias("r")
-    if broadcast_right:
-        rdf = F.broadcast(rdf)
     if isinstance(on, Column):
         cond = on
     else:
@@ -141,8 +138,8 @@ def aggregate(
     up, so a data-NULL row scores 0) and suffix it onto the RowID,
     restoring key uniqueness.
 
-    Known Spark divergence from the SQL standard (found by the round-8
-    grouping fuzz): over EMPTY input, standard ROLLUP/CUBE emit the
+    Known Spark divergence from the SQL standard (found by the grouping
+    differential fuzz): over EMPTY input, standard ROLLUP/CUBE emit the
     grand-total row (COUNT 0, NULL sums — DuckDB/Postgres do); Spark's
     rollup/cube emit nothing. The default keeps Spark's single-scan
     plan; ``empty_grand_total=True`` restores standard semantics by

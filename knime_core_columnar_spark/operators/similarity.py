@@ -109,13 +109,13 @@ def brute_force_topk(
     the deliberate exception to the repo's no-job-at-plan-construction
     rule, because the batch must exist before the kernel closure can
     capture it, and the alternative (per-pair transfer) costs m× the
-    corpus bytes at every execution. This r8 shape replaces the earlier
-    crossJoin + pairwise pandas UDF, whose Arrow transfer carried every
-    corpus VECTOR once per query (m× the corpus bytes); now the corpus
-    crosses Arrow exactly once and the m·d dot products run as m
-    dimension-sequential vectorized accumulations per batch — the SAME
-    floating-point order as the ``dot`` expression and DuckDB's
-    list_dot_product, so cosines stay bit-identical to the SQL oracle.
+    corpus bytes at every execution. A crossJoin + pairwise pandas UDF
+    would carry every corpus VECTOR across Arrow once per query (m× the
+    corpus bytes); here the corpus crosses Arrow exactly once and the
+    m·d dot products run as m dimension-sequential vectorized
+    accumulations per batch — the SAME floating-point order as the
+    ``dot`` expression and DuckDB's list_dot_product, so cosines stay
+    bit-identical to the SQL oracle.
     Rounding happens JVM-side (HALF_UP), never in numpy.
     """
     qrows = (
@@ -952,7 +952,7 @@ def _bm25_score_terms(
     term batch — the shared core of ``bm25_topk`` (terms from query
     text) and ``rm3_expand_topk`` (terms from relevance feedback).
     Exactness and plan shape documented on ``bm25_topk``."""
-    # r11: materialize the postings table ONCE (lazy localCheckpoint) —
+    # materialize the postings table ONCE (lazy localCheckpoint) —
     # it feeds three consumers (doc lengths, document frequencies, the
     # candidate join) and the executed plan showed the corpus tokenize +
     # explode + count shuffle re-running per consumer (ReusedExchange
@@ -1039,16 +1039,16 @@ def embedding_covariance(
 
     Determinism: each component is scaled to int64 micro-units per row
     (the ``embedding_drift`` discipline). Per-row pair products are
-    EXACT for components of any magnitude (round-6 advisory: the
-    earlier unconditional int64 product silently wrapped past
-    |x·scale| > √2⁶³): rows whose max |scaled component| ≤ 3 037 000 499
-    (⌊√(2⁶³−1)⌋ — every pair product fits int64) take the fast int64
-    multiply, other rows form the product in decimal(19,0)×decimal(19,0)
-    (max |product| ≈ 8.5e37 < decimal(38,0)). Both branches are exact
-    integer math producing the identical value — the branch is a
-    performance fork, never a semantic one.
+    EXACT for components of any magnitude (an unconditional int64
+    product would silently wrap past |x·scale| > √2⁶³): rows whose max
+    |scaled component| ≤ 3 037 000 499 (⌊√(2⁶³−1)⌋ — every pair product
+    fits int64) take the fast int64 multiply, other rows form the
+    product in decimal(19,0)×decimal(19,0) (max |product| ≈ 8.5e37 <
+    decimal(38,0)). Both branches are exact integer math producing the
+    identical value — the branch is a performance fork, never a semantic
+    one.
 
-    Accumulation (round-7 verdict item 4 — the decimal tax): in-range
+    Accumulation (avoiding the decimal tax): in-range
     products do NOT accumulate in decimal. Each int64 product splits
     exactly as ``pxy = q·2³¹ + r`` (``r = pmod(pxy, 2³¹) ∈ [0, 2³¹)``,
     ``q = (pxy − r) div 2³¹`` — the subtraction cannot underflow
@@ -1318,8 +1318,8 @@ def pca_project(
     import numpy as np
 
     # ONE corpus scan: the covariance aggregate carries the per-dimension
-    # means (round-6 advisory: a second posexplode scan re-derived sums
-    # the covariance job had already aggregated)
+    # means (a second posexplode scan would re-derive sums the
+    # covariance job already aggregated)
     cov_rows = embedding_covariance(
         df, vec_col, scale=scale, include_means=True
     ).collect()
@@ -1606,7 +1606,7 @@ def mmr_rerank(
 
     lam = int(lambda_milli)
     # id column types come from the input schema — string/int/long query
-    # and doc ids all work (round-6 advisory: these were hard-coded long)
+    # and doc ids all work
     in_types = {f.name: f.dataType.simpleString() for f in candidates.schema.fields}
     out_schema = (
         f"{query_col} {in_types[query_col]}, {doc_col} {in_types[doc_col]}, "
@@ -1767,7 +1767,7 @@ def contrastive_pairs(
     # bucket table can estimate under the broadcast threshold while its
     # deserialized rows (64-float vectors) blow the driver (observed at
     # the 100x rehearsal replica). Below that, a broadcast is correct
-    # and the forced sort was a measured bench tax (VERDICT r6 #2), so
+    # and the forced sort was a measured bench tax, so
     # the hint is conditioned on the actual row count (one count job,
     # dwarfed by the self-join it protects).
     if corpus_count is None:

@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from knime_core_columnar_spark.table import ColumnarTable
 
 #: Tiny per-language stopword marker sets for the n-gram/stopword-voting
 #: language heuristic. Deliberately small + SQL-expressible.
@@ -41,7 +40,7 @@ def tokens(col: Column | str) -> Column:
     splitting below). Empty tokens are dropped: Spark's ``trim`` strips
     SPACES only, so text with leading/trailing newlines/tabs would
     otherwise grow a phantom '' token that inflates every token-derived
-    metric (caught by the round-8 text-quality replay fuzz on
+    metric (caught by the text-quality differential fuzz on
     trailing-newline docs; the fixed gate corpus never produces one, so
     all oracles are unaffected). Cross-engine equivalent:
     ``list_filter(string_split_regex(trim(s), '\\s+'), x -> x <> '')``.
@@ -95,7 +94,7 @@ def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
     sw = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
     # greatest(size, 1): tokens() drops empty tokens, so an empty /
     # whitespace-only doc has size 0 — score it 0.0, not NULL (same
-    # guard gopher_repetition uses; round-8 advisory)
+    # guard gopher_repetition uses)
     return let_col(
         tokens(col),
         lambda t: F.size(
@@ -429,20 +428,6 @@ def gopher_repetition(
     return df.select(id_col, text_col).mapInPandas(battery, cols)
 
 
-def text_profile(table: ColumnarTable, text_col: str = "text") -> ColumnarTable:
-    """Append the full text-analysis profile to a document table."""
-    return table.append_map({
-        "n_chars_c": F.length(F.col(text_col)).cast("long"),
-        "n_tokens": token_count(text_col).cast("long"),
-        "n_tokens_bpe": bpe_ish_token_count(text_col).cast("long"),
-        "punct_ratio": punct_ratio(text_col),
-        "stopword_ratio": stopword_ratio(text_col),
-        "quality": quality_score(text_col),
-        "lang_pred": lang_id(text_col),
-        "fingerprint": fingerprint(text_col),
-    })
-
-
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -647,7 +632,7 @@ def bigram_logprob(
     rows = df.select(
         id_col, F.explode(bi).alias("__p")
     ).select(id_col, F.col("__p.w1").alias("__w1"), F.col("__p.w2").alias("__w2"))
-    # r11: materialize the count table once (lazy localCheckpoint, the
+    # materialize the count table once (lazy localCheckpoint, the
     # kn_bigram/collocations discipline) — it feeds the context totals
     # AND the model join, and exchange reuse does not fire across the
     # differently-shaped consumers
@@ -1441,8 +1426,8 @@ def _para_lang_preds(text_col: Column | str, sep: str) -> Column:
     The 4 vote counts are let-bound ONCE per paragraph: the tie CASE
     references every vote ~5× and an unbound reference re-runs its
     filter pass over the token array per read (~20 interpreted passes
-    per paragraph; r11 measured a filter on the audit's derived columns
-    at 13 inlined copies of this whole pipeline before the binding)."""
+    per paragraph; a filter on the audit's derived columns measured 13
+    inlined copies of this whole pipeline without the binding)."""
     import re as _re
 
     langs = list(LANG_MARKERS)
@@ -1501,7 +1486,7 @@ def language_mix_gate(
 
     Why an expression and not a filter on the audit's columns: Catalyst
     pushes a filter through the audit's projection by SUBSTITUTING the
-    full per-column expressions into the predicate — the r11 plan audit
+    full per-column expressions into the predicate — a plan audit
     found 13 inlined copies of the whole tokenize+vote pipeline (391
     lambda nodes) evaluating per row, 1.2× SLOWER than the two-scan
     semi-join it replaced. Here the prediction array is let-bound once;
@@ -1734,7 +1719,7 @@ def collocations_pmi(
     rows = df.select(F.explode(bi).alias("__p")).select(
         F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2")
     )
-    # r11: materialize the count table ONCE (lazy localCheckpoint — the
+    # materialize the count table ONCE (lazy localCheckpoint — the
     # kn_bigram_logprob discipline): c12 feeds four consumers (left and
     # right marginals, the N₂ total, the scored join) and the executed
     # plan showed ReusedExchange=0 — the corpus tokenize + bigram
@@ -1850,12 +1835,12 @@ def kn_bigram_logprob(
     D = 0.75 default is exactly representable in binary.
 
     Determinism: the probability is assembled in one fixed-order double
-    expression (identical text in the SQL oracle), then ln → round 6 →
-    scale to int64 BEFORE the per-doc sum — the ``unigram_logprob``
-    discipline (its documented 1-ulp ln boundary risk applies here
-    too). P > 0 always: the continuation term is strictly positive for
-    every observed w2, and only observed bigrams are scored (the join
-    is the corpus's own transitions).
+    expression (identical text in the SQL oracle), then ln → round to 6
+    places → scale to int64 BEFORE the per-doc sum — the
+    ``unigram_logprob`` discipline (its documented 1-ulp ln boundary
+    risk applies here too). P > 0 always: the continuation term is
+    strictly positive for every observed w2, and only observed bigrams
+    are scored (the join is the corpus's own transitions).
 
     Scale shape: bigram explode (codegen) → one count aggregation,
     MATERIALIZED once (lazy localCheckpoint — the four derived
@@ -1949,15 +1934,15 @@ def curation_gate_keep(
     ``__gk & __ck & __lk`` (each sub-predicate is the same expression
     tree the flag columns build, with the shared subterms bound).
 
-    Why it exists (r12, the training-pipeline r11 lesson replayed):
-    when the filtered gate was expressed as ``where(flag & ...)`` over
-    the flag PROJECTIONS, Catalyst pushed the predicate through them by
-    SUBSTITUTION — the pushed-down Filter re-tokenized the document
-    once per Gopher CASE branch (~8 interpreted tokenizations/row on
-    the base-corpus side of curation_funnel_delta). Binding the token
-    array, char sum, and C4 text inside one expression keeps the
-    pushed-down predicate at ONE tokenization (+ one lowered copy for
-    the language vote) per row wherever Catalyst moves it."""
+    Why it exists: when the filtered gate is expressed as
+    ``where(flag & ...)`` over the flag PROJECTIONS, Catalyst pushes the
+    predicate through them by SUBSTITUTION — the pushed-down Filter
+    re-tokenizes the document once per Gopher CASE branch (~8
+    interpreted tokenizations/row on the base-corpus side of
+    curation_funnel_delta). Binding the token array, char sum, and C4
+    text inside one expression keeps the pushed-down predicate at ONE
+    tokenization (+ one lowered copy for the language vote) per row
+    wherever Catalyst moves it."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
 
     def with_toks(toks: Column) -> Column:
@@ -2079,20 +2064,19 @@ def curation_gate_fingerprints(
     synthetic corpus has no natural newlines — pass None for real
     corpora.
 
-    Plan shape (round-11 rework): the gates CHAIN on one frame via
-    their ``append=True`` mode — ONE corpus scan, zero joins, zero
-    exchanges. The previous shape joined three separately-derived flag
-    frames on the id, which re-read the corpus per gate and shuffled
-    corpus-sized flag tables at scale.
+    Plan shape: the gates CHAIN on one frame via their ``append=True``
+    mode — ONE corpus scan, zero joins, zero exchanges. Joining three
+    separately-derived flag frames on the id would re-read the corpus
+    per gate and shuffle corpus-sized flag tables at scale.
 
-    Round-12: the filtered (default) mode applies
-    :func:`curation_gate_keep` — the SAME gate conjunction as one
-    let-bound expression — directly on the input. Filtering on the flag
-    projections let Catalyst push the predicate down by substitution,
-    and the pushed Filter re-tokenized the document once per Gopher
-    CASE branch (~8 interpreted tokenizations/row measured on
-    curation_funnel_delta's base side); the bound form keeps it at one
-    tokenization wherever the predicate lands."""
+    The filtered (default) mode applies :func:`curation_gate_keep` —
+    the SAME gate conjunction as one let-bound expression — directly on
+    the input. Filtering on the flag projections lets Catalyst push the
+    predicate down by substitution, and the pushed Filter re-tokenizes
+    the document once per Gopher CASE branch (~8 interpreted
+    tokenizations/row measured on curation_funnel_delta's base side);
+    the bound form keeps it at one tokenization wherever the predicate
+    lands."""
     if not flags:
         keep = curation_gate_keep(
             text_col,

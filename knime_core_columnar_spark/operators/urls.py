@@ -55,7 +55,7 @@ _HOST_IN_AUTH_RE = r"^(?:[^@]*@)?([^:]*)"
 _PORT_IN_AUTH_RE = r":([0-9]+)$"
 _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
 #: anchored to the pre-fragment region: a '?' that first appears inside
-#: the fragment is NOT a query (round-10 review finding)
+#: the fragment is NOT a query
 _QUERY_RE = r"^[^#?]*\?([^#]*)"
 
 
@@ -188,7 +188,7 @@ def url_dedup(
     url_col: str = "url",
 ) -> DataFrame:
     """Canonical-URL exact dedup: keep the minimum-id row per canonical
-    URL. Same election pattern as ``exact_dedup`` (round-10): shuffle
+    URL. Same election pattern as ``exact_dedup``: shuffle
     only (md5-16(canon), id), partially-aggregated min winner +
     semi-join back — map-side combine absorbs the hottest URL, the join
     is AQE-skew-splittable, no Window. Adds ``canon_url``."""

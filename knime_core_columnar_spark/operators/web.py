@@ -18,8 +18,7 @@ Canonical form (documented simplifications):
 - ``domain`` is the PSL-backed registrable domain (operators/psl.py:
   publicsuffix.org algorithm over an embedded ICANN-section subset —
   ``co.uk``/``com.au``/US-state suffixes resolve exactly; unknown TLDs
-  fall back to the last-two-labels heuristic). Pass ``psl=False`` for
-  the bare heuristic.
+  fall back to the last-two-labels heuristic).
 - ``user:pass@`` userinfo is stripped from the authority before the
   port strip (so a password containing ``:`` cannot defeat it);
 - bracketed IPv6 authorities (``http://[::1]:8080/``) are NOT handled:
@@ -38,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from knime_core_columnar_spark.operators.psl import registered_domain
+
 __all__ = [
     "canonical_url_parts", "canonicalize_url", "host_stats",
     "html_main_text", "extract_main_text", "apply_disallow_rules",
@@ -45,7 +46,7 @@ __all__ = [
 ]
 
 
-def canonical_url_parts(url: Column | str, psl: bool = True) -> Column:
+def canonical_url_parts(url: Column | str) -> Column:
     """Struct(host, domain, path, canonical) from a raw URL string.
 
     All steps are engine-portable: ``substring_index``/``split_part``
@@ -53,8 +54,7 @@ def canonical_url_parts(url: Column | str, psl: bool = True) -> Column:
     strips (no lookaround, no backrefs), so the DuckDB oracle computes
     the identical canonical form. ``domain`` is the PSL-backed
     registrable domain (psl.registered_domain — oracle twin
-    psl.registered_domain_sql); ``psl=False`` keeps the plain
-    last-two-labels heuristic.
+    psl.registered_domain_sql).
     """
     u = F.col(url) if isinstance(url, str) else url
     u = F.lower(F.trim(u))
@@ -81,15 +81,9 @@ def canonical_url_parts(url: Column | str, psl: bool = True) -> Column:
         r"\.+$",
         "",
     )
-    if psl:
-        from knime_core_columnar_spark.operators.psl import registered_domain
-
-        domain = registered_domain(host)
-    else:
-        domain = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
     return F.struct(
         host.alias("host"),
-        domain.alias("domain"),
+        registered_domain(host).alias("domain"),
         path.alias("path"),
         F.concat(host, path).alias("canonical"),
     )
@@ -148,7 +142,7 @@ def host_stats(
 
 
 # ---------------------------------------------------------------------------
-# HTML main-text extraction (round 7)
+# HTML main-text extraction
 # ---------------------------------------------------------------------------
 
 # Block-level boundaries: opening or closing occurrences become block
@@ -230,7 +224,7 @@ def html_main_text(
         # (text field + word count) and an unbound reference re-runs
         # the tag-strip + entity-decode + collapse chain per read —
         # interpreted HOF lambdas get no subexpression elimination
-        # (r11 measurement discipline, same as language_mix_gate)
+        # (same binding as language_mix_gate)
         def _with_plain(plain: Column) -> Column:
             words = F.size(F.filter(F.split(plain, " "), lambda w: w != ""))
             link_len = F.aggregate(
@@ -294,7 +288,7 @@ def extract_main_text(
     # inline (and per row re-evaluate) the whole extraction pipeline
     # once per field — CollapseProject keeps the boundary because the
     # alias is non-cheap and multiply referenced. The staging name is
-    # collision-safe (ADVICE r11): an input that already carries "__m"
+    # collision-safe: an input that already carries "__m"
     # must not be silently overwritten and dropped.
     stage = "__m"
     while stage in df.columns:

@@ -118,20 +118,3 @@ def merge_schemas(
         nullable = f.nullable or seen_count[name] < n
         out.append(T.StructField(name, f.dataType, nullable, f.metadata))
     return T.StructType(out)
-
-
-def with_field_metadata(
-    schema: T.StructType, column: str, metadata: dict
-) -> T.StructType:
-    """Return a copy of ``schema`` with ``metadata`` merged into one field's
-    metadata (the ``StructField.metadata`` equivalent of the reference's
-    Arrow extension-type tagging)."""
-    fields = []
-    for f in schema.fields:
-        if f.name == column:
-            md = dict(f.metadata or {})
-            md.update(metadata)
-            fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
-        else:
-            fields.append(f)
-    return T.StructType(fields)

@@ -14,7 +14,6 @@ from knime_core_columnar_spark.sources.io import (
     read_csv,
     read_jsonl,
     write_arrow_ipc,
-    write_parquet,
 )
 
 __all__ = [
@@ -23,5 +22,4 @@ __all__ = [
     "read_csv",
     "read_jsonl",
     "write_arrow_ipc",
-    "write_parquet",
 ]

@@ -2,8 +2,8 @@
 
 ``create_table`` mirrors the reference's TableBackend.create write path
 (ColumnarTableBackend.java:116-148 + the DefaultColumnarBatchStore stack,
-SURVEY.md §3.1): schema-declared ingest with optional RowID duplicate
-checking and domain computation. The reference runs those as async
+SURVEY.md §3.1): schema-declared ingest with RowID duplicate checking
+and optional domain computation. The reference runs those as async
 single-node pipeline stages; here they are one distributed aggregation
 each, and the physical concerns (batching, dict encoding, compression,
 caching) belong to Parquet/Tungsten.
@@ -171,24 +171,6 @@ def read_arrow_ipc(
     return ColumnarTable.from_dataframe(df, key_columns=key_columns)
 
 
-def write_parquet(
-    table: ColumnarTable,
-    path: str,
-    mode: str = "error",
-    partition_by: Sequence[str] | None = None,
-    target_rows_per_file: int | None = None,
-) -> None:
-    """Materialize to Parquet. ``partition_by`` creates hive-style
-    partition dirs (partition pruning on read — the scale lever the
-    reference lacks entirely). Row-group geometry (~the reference's
-    64 MiB batches) comes from parquet.block.size."""
-    df = table.df
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_arrow_ipc(table: ColumnarTable, directory: str) -> list[str]:
     """Distributed Arrow IPC export: each partition writes its own
     ``part-*.arrow`` file via pyarrow (executor-side, parallel, no
@@ -275,13 +257,13 @@ def create_table(
     data: DataFrame | Sequence[tuple],
     schema: T.StructType | str | None = None,
     key_columns: Sequence[str] | None = None,
-    check_duplicate_keys: bool = True,
     compute_column_domains: bool = False,
     max_nominal_values: int = 60,
 ) -> ColumnarTable:
     """The TableBackend.create ingest path (ColumnarTableBackend.java:116):
-    build a table with declared schema; optionally verify RowID uniqueness
-    (DuplicateCheckWritable) and compute column domains (DomainWritable) —
+    build a table with declared schema; always verify RowID uniqueness
+    (DuplicateCheckWritable; SURVEY risk 3: the check must never be
+    skipped) and optionally compute column domains (DomainWritable) —
     each one distributed aggregation, mirroring the write-pipeline
     operators of SURVEY §2.3."""
     if isinstance(data, DataFrame):
@@ -289,8 +271,7 @@ def create_table(
     else:
         df = spark.createDataFrame(data, schema)
     table = ColumnarTable.from_dataframe(df, key_columns=key_columns)
-    if check_duplicate_keys:
-        table.check_duplicate_keys()
+    table.check_duplicate_keys()
     if compute_column_domains:
         doms = compute_domains(table, max_nominal_values=max_nominal_values)
         table = attach_domains(table, doms)

@@ -54,13 +54,6 @@ from knime_core_columnar_spark.schema import ROW_KEY, merge_schemas, promote_typ
 
 ColumnLike = Union[str, Column]
 
-# Single-slot registry of the DataFrame persisted by
-# multi_slice(share_scan=True): starting a new shared scan evicts the
-# previous cache so repeated invocations never accumulate persisted
-# DataFrames (callers may also release eagerly via release_shared_scan).
-_ACTIVE_SHARED_SCANS: list[DataFrame] = []
-
-
 class RowIdPolicy(Enum):
     """RowID handling for concatenate — ColumnarTableBackend.java:186-215."""
 
@@ -71,10 +64,6 @@ class RowIdPolicy(Enum):
 
 
 class DuplicateRowKeyError(ValueError):
-    pass
-
-
-class RowKeyMismatchError(ValueError):
     pass
 
 
@@ -227,7 +216,6 @@ class ColumnarTable:
         slices: Sequence[tuple[Sequence[int | str] | None, tuple[int, int] | None]],
         order_by: Sequence[ColumnLike] | None = None,
         index_column: str | None = None,
-        share_scan: bool = True,
     ) -> list["ColumnarTable"]:
         """N (column-subset, row-range) slices from ONE call — the
         TableBackend multi-slice entry point
@@ -237,60 +225,22 @@ class ColumnarTable:
         (the reference prepends column 0 unconditionally,
         ColumnarTableBackend.java:310-313).
 
-        ``share_scan=True`` persists the parent once so the N slice
-        materializations read the source a single time instead of N
-        times (the Spark twin of the reference's N virtual tables over
-        one shared ReferenceTable). The cache is reclaimed automatically:
-        at most ONE shared-scan parent is live per process — starting a
-        new ``multi_slice(share_scan=True)`` unpersists the previous
-        one, so repeated invocations (e.g. a benchmark loop that never
-        cleans up) cannot accumulate cached DataFrames. Call
-        ``release_shared_scan()`` on any returned slice to reclaim it
-        eagerly, or pass ``share_scan=False`` for fully lazy uncached
-        slices. With an ``index_column`` each row range is a
-        partition-prunable filter — the no-shuffle scale path; otherwise
-        ranges sort on ``order_by`` (RowID default).
+        Like the reference's N virtual tables over one reference table,
+        every slice is a lazy view of ``self``: nothing is persisted, and
+        each slice's scan reads only the columns it selects. With an
+        ``index_column`` each row range is a partition-prunable filter —
+        the no-shuffle scale path; otherwise ranges sort on ``order_by``
+        (RowID default).
         """
-        src: ColumnarTable = self
-        parent_df = None
-        if share_scan and len(slices) > 1:
-            # Evict the previous shared-scan cache (single-slot registry):
-            # unpersist() only drops cached blocks — any slice still
-            # holding the old parent stays correct and recomputes lazily.
-            while _ACTIVE_SHARED_SCANS:
-                try:
-                    _ACTIVE_SHARED_SCANS.pop().unpersist()
-                except Exception:
-                    # The previous parent may belong to a stopped
-                    # SparkSession (test teardown); its cache died with
-                    # the context, so a failed unpersist is ignorable.
-                    pass
-            parent_df = self._df.persist()
-            _ACTIVE_SHARED_SCANS.append(parent_df)
-            src = self._wrap(parent_df)
         out: list[ColumnarTable] = []
         for cols_sel, rng in slices:
-            t = src
+            t = self
             if rng is not None:
                 t = t.slice(rng[0], rng[1], order_by=order_by, index_column=index_column)
             if cols_sel is not None:
                 t = t.select_columns(*cols_sel)
-            t._shared_scan_parent = parent_df
             out.append(t)
         return out
-
-    def release_shared_scan(self) -> None:
-        """Unpersist the parent cached by ``multi_slice(share_scan=True)``
-        (no-op otherwise). Consumed slices recompute lazily if re-used."""
-        parent = getattr(self, "_shared_scan_parent", None)
-        if parent is not None:
-            try:
-                parent.unpersist()
-            except Exception:
-                pass
-            if parent in _ACTIVE_SHARED_SCANS:
-                _ACTIVE_SHARED_SCANS.remove(parent)
-            self._shared_scan_parent = None
 
     def append_missing_value_columns(
         self, columns: dict[str, T.DataType] | T.StructType
@@ -665,7 +615,7 @@ class ColumnarTable:
     def append(
         self,
         others: Sequence["ColumnarTable"],
-        validate: bool | str = True,
+        validate: bool = True,
     ) -> "ColumnarTable":
         """Positional hstack of equal-length tables, RowID-aligned —
         append, ColumnarVirtualTable.java:222-237 / ColumnarTableBackend.java:218-268.
@@ -675,42 +625,43 @@ class ColumnarTable:
         (TableTransformUtils.checkRowKeysMatch:120-143) and equal sizes
         (:145-152). We therefore hstack via equi-join on ``_row_key``.
 
-        ``validate`` modes:
+        ``validate``:
         - ``True`` (default): full-outer join with per-side presence
           markers checked by ``assert_true`` inside the same single pass —
           a key missing on any side fails the job at execution time with
           zero extra scans (the 100 TB path).
-        - ``"eager"``: count-based pre-check that raises
-          :class:`RowKeyMismatchError` immediately (extra job).
         - ``False``: plain inner join, caller guarantees alignment.
+        Any other value raises ``ValueError``: saved plans pass it
+        through unchecked, and a stale string must not pick a join.
 
         Assumes unique RowIDs per input (the table invariant the reference
         enforces at write time — DuplicateCheckWritable.java:69; use
         :meth:`check_duplicate_keys` when in doubt). Co-partitioned /
         bucketed inputs on ``_row_key`` make the join shuffle-free.
         """
-        tables = [self, *others]
+        if not isinstance(validate, bool):
+            raise ValueError(f"append: validate must be True or False, got {validate!r}")
         seen: dict[str, int] = {ROW_KEY: 1}
         for c in self.columns:
             seen[c] = 1
-        how = "full" if validate is True else "inner"
+        how = "full" if validate else "inner"
         markers: list[str] = []
         joined = self._df
-        if validate is True:
+        if validate:
             joined = joined.withColumn("__m0", F.lit(True))
             markers.append("__m0")
-        for i, t in enumerate(tables[1:], start=1):
+        for i, t in enumerate(others, start=1):
             right = t.df
             for c in t.columns:  # disambiguate duplicate names like the
                 k = seen.get(c, 0)  # reference's appended-table suffixing
                 seen[c] = k + 1
                 if k:
                     right = right.withColumnRenamed(c, f"{c}_{k}")
-            if validate is True:
+            if validate:
                 right = right.withColumn(f"__m{i}", F.lit(True))
                 markers.append(f"__m{i}")
             joined = joined.join(right, on=ROW_KEY, how=how)
-        if validate is True:
+        if validate:
             cond = F.lit(True)
             for m in markers:
                 cond = cond & F.col(m).isNotNull()
@@ -730,18 +681,7 @@ class ColumnarTable:
                 .filter(F.col("__align").isNull())
                 .drop("__align", *markers)
             )
-        result = ColumnarTable(joined)
-        if validate == "eager":
-            n_join = joined.count()
-            for i, t in enumerate(tables):
-                n = t.count()
-                if n != n_join:
-                    raise RowKeyMismatchError(
-                        f"append: table {i} has {n} rows but only {n_join} RowIDs "
-                        "align across all inputs (sizes or keys differ — "
-                        "TableTransformUtils.java:120-152 semantics)"
-                    )
-        return result
+        return ColumnarTable(joined)
 
     def cast_columns(self, casts: dict[str, T.DataType | str]) -> "ColumnarTable":
         """replaceSpec with per-column casts — ColumnarSpecReplacer.java:137-186,

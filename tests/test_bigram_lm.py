@@ -3,13 +3,14 @@ differential oracle on the documents table (the staged round-5 catalog
 oracle, compared with the driver-faithful multiset machinery)."""
 
 import math
+import os
 import sys
 
 import pytest
 
 from knime_core_columnar_spark.operators.text import bigram_logprob
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from knime_core_columnar_spark.catalog import BIGRAM_LM_ORACLE as BIGRAM_ORACLE
 

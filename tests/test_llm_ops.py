@@ -140,12 +140,6 @@ def test_decode_image_features_deterministic(spark, docs):
     assert f1 == f2 and len(f1) == 5
 
 
-def test_decode_strict_raises(spark, docs):
-    d = M.attach_binary_payload(docs, "text")
-    with pytest.raises(Exception, match="NotImplementedError|imaging"):
-        M.decode_image_features(d, strict=True).collect()
-
-
 def test_sample_frames_expansion(spark, docs):
     d = M.attach_binary_payload(docs, "text")
     out = M.sample_frames(d, every_n_bytes=10).collect()
@@ -424,8 +418,6 @@ def test_decode_audio_features(spark, docs):
     assert r0["n_samples"] == n // 2
     assert abs(r0["duration_s"] - (n // 2) / 16000) < 1e-6
     assert 0 < r0["mean_amp"] < 256 and 0 < r0["peak_amp"] < 256
-    with pytest.raises(Exception, match="NotImplementedError|audio"):
-        M.decode_audio_features(d, strict=True).collect()
 
 
 def test_decode_audio_features_empty_payload_is_null(spark):

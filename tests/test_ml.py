@@ -3,6 +3,7 @@ scaled-int GD arithmetic on a micro example, plus a fully unrolled
 DuckDB differential oracle on the embeddings table (the staged
 round-6 catalog oracle)."""
 
+import os
 import sys
 
 import numpy as np
@@ -11,7 +12,7 @@ from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.operators.ml import logreg_lite
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 
 def _numpy_replica(X, y, iters=2, lr=0.25):

@@ -200,12 +200,36 @@ def test_multi_slice(spark):
     # all-columns / all-rows slices pass through
     (full,) = t.multi_slice([(None, None)])
     assert full.df.count() == 10 and full.columns == ["n", "s"]
-    # the shared-scan cache is caller-releasable (and a no-op when
-    # share_scan never persisted anything)
-    s0.release_shared_scan()
-    s1.release_shared_scan()
-    full.release_shared_scan()
-    assert s0.df.count() == 3  # slices recompute lazily after release
+    assert s0.df.count() == 3  # slices stay lazy and re-executable
+
+
+def test_multi_slice_persists_nothing(spark, tmp_path):
+    """Slices are lazy views of the parent: building and collecting them
+    caches nothing, and each slice's Parquet scan reads only the columns
+    that slice selects (plus the key its RowID and order derive from)."""
+    import re
+
+    path = str(tmp_path / "wide.parquet")
+    spark.createDataFrame(
+        [(i, i * 10, f"b{i}", float(i)) for i in range(20)],
+        "k long, a long, b string, c double",
+    ).write.parquet(path)
+    t = ColumnarTable.from_dataframe(spark.read.parquet(path), key_columns=["k"])
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    slices = t.multi_slice(
+        [(["k", "a"], (0, 5)), (["k", "b"], (5, 12))], order_by=[F.col("k")]
+    )
+    assert [len(s.df.collect()) for s in slices] == [5, 7]
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+    for s, own in zip(slices, [{"k", "a"}, {"k", "b"}]):
+        plan = s.df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan
+        schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+        assert schemas, plan
+        for fields in schemas:
+            assert {f.split(":")[0] for f in fields.split(",")} == own, plan
 
 
 def test_upsert_semantics(spark):

@@ -3,6 +3,7 @@ full DuckDB differential oracle on the real embeddings table — the SQL
 here is the staged round-5 catalog oracle, exercised through the same
 dtype-sensitive comparison the external driver uses."""
 
+import os
 import sys
 
 import pytest
@@ -10,7 +11,7 @@ from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.operators.semdedup import semantic_dedup
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from knime_core_columnar_spark.catalog import SEMDEDUP_ORACLE
 

@@ -10,7 +10,6 @@ from knime_core_columnar_spark.table import (
     ColumnarTable,
     DuplicateRowKeyError,
     RowIdPolicy,
-    RowKeyMismatchError,
 )
 
 
@@ -86,10 +85,9 @@ def test_hstack_name_collision(small):
     assert t.columns == ["a", "b", "s", "a_1", "b_1", "s_1"]
 
 
-def test_hstack_key_mismatch_eager(spark, small):
-    bad = ColumnarTable(small.df.filter("a < 9").select(ROW_KEY, F.col("a").alias("c")))
-    with pytest.raises(RowKeyMismatchError):
-        small.append([bad], validate="eager")
+def test_hstack_validate_rejects_non_bool(small):
+    with pytest.raises(ValueError, match="validate must be True or False"):
+        small.append([small], validate="eager")
 
 
 def test_hstack_key_mismatch_lazy(spark, small):

@@ -37,7 +37,8 @@ import decimal as _decimal
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # DuckDB types that pandas-canonicalize to a DIFFERENT dtype than the
 # Spark column they are meant to mirror. HUGEINT -> float64 (Spark sum of
@@ -211,7 +212,7 @@ def main():
 
         try:
             sha = subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"], cwd="/root/repo",
+                ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
                 capture_output=True, text=True, timeout=10,
             ).stdout.strip()
         except Exception:

@@ -5,9 +5,10 @@ Usage: python tools/explain.py <query> [query ...] [--sf DIR]
 Shows the full formatted plan plus a one-line summary of scale-relevant
 markers (joins, exchanges, pushdown, top-k operators)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 MARKERS = [
     "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
