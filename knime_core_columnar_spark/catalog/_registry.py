@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from knime_core_columnar_spark.schema import parquet_schema
+
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
 
@@ -125,9 +127,10 @@ def _table_version(path: str) -> tuple | None:
 def _table_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
     """Metadata of the catalog table ``{sf_dir}/{name}.parquet`` (a file
     or a directory), built once per table version from one pass over the
-    parquet footers plus one Spark schema inference, then served from
-    :data:`_TABLE_META`. A miss costs one Spark job; a hit costs only
-    the stat calls that form the version."""
+    parquet footers plus :func:`parquet_schema` (the footer's Spark
+    schema stamp, or one Spark inference job for files Spark did not
+    write), then served from :data:`_TABLE_META`. A hit costs only the
+    stat calls that form the version."""
     path = f"{sf_dir}/{name}.parquet"
     version = _table_version(path)
     if version is None:
@@ -146,7 +149,7 @@ def _table_meta(spark: SparkSession, sf_dir: str, name: str) -> TableMeta:
     except (OSError, pa.ArrowException):
         return _UNKNOWN_TABLE
     meta = TableMeta(
-        schema=spark.read.parquet(path).schema,
+        schema=parquet_schema(spark, path),
         row_groups=sum(m.num_row_groups for m in footers),
         rows=sum(m.num_rows for m in footers),
         bytes=sum(size for _f, _mtime, size in version),

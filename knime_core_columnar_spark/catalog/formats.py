@@ -15,6 +15,7 @@ from knime_core_columnar_spark.catalog._registry import (
     _t,
     query,
 )
+from knime_core_columnar_spark.schema import read_parquet
 
 
 @query(
@@ -111,7 +112,7 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{part_dir}.part{os.getpid()}")
         )
         _publish_dir(f"{part_dir}.part{os.getpid()}", part_dir)
-    ev = spark.read.parquet(part_dir)
+    ev = read_parquet(spark, part_dir)
     return (
         ev.filter(F.col("event_type").isin("click", "purchase"))
         .groupBy(

@@ -16,6 +16,7 @@ from knime_core_columnar_spark.catalog._registry import (
     _table_meta,
     query,
 )
+from knime_core_columnar_spark.schema import read_parquet
 
 
 @query(
@@ -2429,7 +2430,7 @@ def _hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(staging)
         _publish_dir(staging, skt_dir)
-    stored = spark.read.parquet(skt_dir)
+    stored = read_parquet(spark, skt_dir)
     roll = hll_rollup(stored, ["source"])
     exact = d.groupBy("source").agg(
         F.countDistinct("doc_id").alias("exact_distinct")

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from knime_core_columnar_spark.schema import read_parquet
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ with double accumulation in element order (deterministic).
@@ -1490,7 +1492,7 @@ def build_ivf_index(
     # consistent with what probes will read, even if the sample plan
     # would recompute differently after a corpus change
     spark = corpus.sparkSession
-    cents_r = spark.read.parquet(f"{path}/centroids").withColumnRenamed(
+    cents_r = read_parquet(spark, f"{path}/centroids").withColumnRenamed(
         "centroid", "__cent"
     )
     assigned = _nearest_cells(
@@ -1528,7 +1530,7 @@ def ivf_probe_index(
     Returns (query_id, neighbor_id, cos, rank) — identical to
     ``ivf_topk`` on the same corpus/parameters (parity-pinned).
     """
-    cents = spark.read.parquet(f"{path}/centroids").withColumnRenamed(
+    cents = read_parquet(spark, f"{path}/centroids").withColumnRenamed(
         "centroid", "__cent"
     )
     probes = _nearest_cells(
@@ -1540,7 +1542,7 @@ def ivf_probe_index(
     # bounded metadata collect: nprobe cells per query in the batch
     cells = sorted({r["cell_id"] for r in probes.select("cell_id").distinct().collect()})
     postings = (
-        spark.read.parquet(f"{path}/postings")
+        read_parquet(spark, f"{path}/postings")
         .filter(F.col("cell_id").isin(cells))
         .select(
             F.col("vec_id").alias("neighbor_id"),

@@ -6,6 +6,15 @@ thread pools — ``ColumnarPreferenceUtils.java:161-262``,
 configs: AQE for runtime re-planning, partition sizing, broadcast
 thresholds, Arrow for the Python boundary. Tests run on ``local[N]`` but
 every default below is chosen to also hold on a 1000-executor cluster.
+
+The driver boundary is tuned too: PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off, because with it
+on every Column or DataFrame call sends extra py4j commands to record
+the Python stack (``F.col("a").cast("string").alias("b")`` costs 35
+round trips instead of 5). The price is that an ``AnalysisException``
+no longer names the Python line that built the failing column; pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to :func:`get_spark` to get it back while debugging.
 """
 
 from __future__ import annotations
@@ -41,6 +50,9 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.cbo.enabled": "true",
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
+    # Driver boundary: no per-call Python call-site capture (see the
+    # module docstring).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -50,9 +50,11 @@ Two pyarrow gotchas this module absorbs:
   conversion would silently truncate to micros).
 
 The decoded batches feed Spark as ONE pyarrow Table via
-``spark.createDataFrame(arrow_table)`` — Arrow-native transfer, no
-per-row Python loop anywhere on the read path; Spark then distributes
-the rows across partitions as usual.
+``spark.createDataFrame(arrow_table, schema=...)``, where the schema is
+the Arrow-to-Spark mapping with each column's ``knime.*`` metadata on its
+field — Arrow-native transfer, no per-row Python loop anywhere on the
+read path and no projection per annotated column; Spark then
+distributes the rows across partitions as usual.
 """
 
 from __future__ import annotations
@@ -424,24 +426,32 @@ def read_knime_arrow(
     key_columns: Sequence[str] | None = None,
 ) -> ColumnarTable:
     """Read a KNIME-written Arrow IPC file into a ColumnarTable with the
-    logical-type mapping applied (see module docstring)."""
+    logical-type mapping applied (see module docstring).
+
+    The file is memory-mapped, not copied, and the Spark schema is built
+    once with every column's ``knime.*`` metadata on its field, so the
+    returned frame is a single scan of the decoded Arrow table."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.ipc
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.utils import is_timestamp_ntz_preferred
 
     knime_meta = read_knime_metadata(path)
 
-    with open(path, "rb") as f:
-        data = f.read()
-    if data[: len(ARROW_MAGIC)] != ARROW_MAGIC:
+    # The file is memory-mapped once; the embedded stream is a zero-copy
+    # slice of it. Only the legacy LZ4-block rewrite needs it as bytes.
+    with pa.memory_map(path) as src:
+        buf = src.read_buffer()
+    if buf.slice(0, len(ARROW_MAGIC)).to_pybytes() != ARROW_MAGIC:
         raise ValueError(f"{path}: not an Arrow file (bad magic)")
     # Embedded-stream read (offset 8 = magic + padding): the stream
     # reader accepts KNIME's per-batch dictionary replacement, which the
     # random-access file reader rejects.
-    stream = data[8:]
+    stream = buf.slice(8)
     if knime_meta.get(KNIME_LZ4_BLOCK_KEY) == "true":
-        stream = _decompress_lz4_block_stream(stream)
-    reader = pa.ipc.open_stream(pa.py_buffer(stream))
+        stream = pa.py_buffer(_decompress_lz4_block_stream(stream.to_pybytes()))
+    reader = pa.ipc.open_stream(stream)
     batches = list(reader)
     if not batches:
         raise ValueError(f"{path}: no record batches")
@@ -465,7 +475,7 @@ def read_knime_arrow(
     arrow_table = pa.table(col_arrays, names=names)
 
     # Column metadata for the Spark schema (logical types, factory
-    # versions) — applied after createDataFrame via withMetadata.
+    # versions), carried by the schema createDataFrame is given.
     factory_versions = knime_meta.get(KNIME_FACTORY_VERSIONS_KEY, "").split(",")
     col_meta: dict[str, dict[str, Any]] = {}
     for i, f_ in enumerate(arrow_schema):
@@ -501,9 +511,19 @@ def read_knime_arrow(
         )
         arrow_table = arrow_table.add_column(0, ROW_KEY, row_ids)
 
-    df = spark.createDataFrame(arrow_table)
-    for name, meta in col_meta.items():
-        df = df.withMetadata(name, meta)
+    # The Arrow-to-Spark type mapping createDataFrame applies when it is
+    # given no schema, plus each column's metadata: one plan node, where
+    # a projection per annotated column would stack up.
+    spark_schema = from_arrow_schema(
+        arrow_table.schema, prefer_timestamp_ntz=is_timestamp_ntz_preferred()
+    )
+    df = spark.createDataFrame(
+        arrow_table,
+        schema=T.StructType([
+            T.StructField(f.name, f.dataType, f.nullable, col_meta.get(f.name))
+            for f in spark_schema.fields
+        ]),
+    )
     table = ColumnarTable.from_dataframe(df, key_columns=key_columns)
     table.knime_metadata = knime_meta
     return table

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from knime_core_columnar_spark.schema import read_parquet
+
 
 def stream_from_directory(
     spark: SparkSession,
@@ -706,7 +708,7 @@ def streaming_hll_store_ingest(
         _recover()
         delta = hll_sketch_table(batch_df, group_cols, value_col, lg_k)
         if os.path.isdir(store_dir):
-            store = spark.read.parquet(store_dir)
+            store = read_parquet(spark, store_dir)
             merged = hll_sketch_merge_tables(store, delta, group_cols)
         else:
             merged = delta
@@ -809,7 +811,7 @@ def streaming_curation_admit(
             winners = gated.groupBy("__fp").agg(F.min(id_col).alias(id_col))
             if os.path.isdir(index_dir):
                 new = winners.join(
-                    spark.read.parquet(index_dir), "__fp", "left_anti"
+                    read_parquet(spark, index_dir), "__fp", "left_anti"
                 )
             else:
                 new = winners
@@ -824,9 +826,9 @@ def streaming_curation_admit(
         # a published partition is authoritative: a retry reuses it
         # instead of re-deriving (the anti-join would come back empty
         # once the fps are merged, and overwriting would lose the rows)
-        admitted = spark.read.parquet(batch_out)
+        admitted = read_parquet(spark, batch_out)
         if os.path.isdir(index_dir):
-            index = spark.read.parquet(index_dir)
+            index = read_parquet(spark, index_dir)
             # add only fps not already merged — replay-safe
             to_add = admitted.select("__fp").join(index, "__fp", "left_anti")
             merged = index.unionByName(to_add)

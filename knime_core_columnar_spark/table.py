@@ -50,7 +50,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from knime_core_columnar_spark.schema import ROW_KEY, merge_schemas, promote_types
+from knime_core_columnar_spark.schema import (
+    ROW_KEY,
+    merge_schemas,
+    promote_types,
+    read_parquet,
+)
 
 ColumnLike = Union[str, Column]
 
@@ -130,8 +135,12 @@ class ColumnarTable:
         """Source operator over a Parquet table
         (≅ ColumnarVirtualTable source ctor + Arrow batch store read —
         OffHeapArrowBatchReadStore.java; Parquet supplies batching,
-        compression, dictionary encoding, and zone-map stats for free)."""
-        return cls.from_dataframe(spark.read.parquet(path), key_columns=key_columns)
+        compression, dictionary encoding, and zone-map stats for free).
+        The schema comes from the footer stamp when Spark wrote the files
+        (:func:`~knime_core_columnar_spark.schema.parquet_schema`), so no
+        inference job runs; other files are inferred as by
+        ``spark.read.parquet``."""
+        return cls.from_dataframe(read_parquet(spark, path), key_columns=key_columns)
 
     # -- accessors -----------------------------------------------------------
 
