@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from knime_core_columnar_spark.schema import parquet_schema
+from knime_core_columnar_spark.sources.fsio import write_shard_bytes
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -48,36 +49,55 @@ def query(name: str, oracle: str | None = None):
 _PKG_SHIPPED: set[int] = set()
 
 
-def _ensure_pkg_on_executors(spark: SparkSession) -> None:
-    """Ship this package to executor python workers via addPyFile.
-
-    Queries that use pandas UDFs / mapInPandas reference module-level
-    kernels; cloudpickle serializes those BY REFERENCE when the module is
-    importable on the driver, so executors must be able to import the
-    package too. When the harness runs from a foreign cwd (driver-style
-    file-path import), workers would otherwise fail with
-    ModuleNotFoundError. A zip of the package added per-SparkContext
-    fixes this everywhere (local and cluster mode alike)."""
-    key = id(spark.sparkContext)
-    if key in _PKG_SHIPPED:
-        return
+def _pkg_zip(pkg_dir: str) -> str:
+    """Zip every ``.py`` file under the package directory ``pkg_dir`` to
+    ``knime_core_columnar_spark-<sha12>.zip`` in the temp directory and
+    return its path. The name is the sha256 of the zip's bytes, and the
+    bytes depend only on the sources (sorted entries, one fixed
+    timestamp), so processes that run different checkouts never write
+    the same path, and a rewrite of one path writes the same bytes."""
+    import hashlib
+    import io
     import os
     import tempfile
     import zipfile
 
+    top = os.path.dirname(pkg_dir)
+    files = sorted(
+        os.path.relpath(os.path.join(root, f), top)
+        for root, _dirs, fs in os.walk(pkg_dir)
+        for f in fs
+        if f.endswith(".py")
+    )
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        for rel in files:
+            with open(os.path.join(top, rel), "rb") as f:
+                z.writestr(zipfile.ZipInfo(rel, (1980, 1, 1, 0, 0, 0)), f.read())
+    data = buf.getvalue()
+    name = f"knime_core_columnar_spark-{hashlib.sha256(data).hexdigest()[:12]}.zip"
+    return write_shard_bytes(tempfile.gettempdir(), name, data)
+
+
+def _ensure_pkg_on_executors(spark: SparkSession) -> None:
+    """Ship this package to the executors' Python workers with
+    ``addPyFile``, once per SparkContext.
+
+    Pandas UDF and mapInPandas kernels are module-level functions, which
+    cloudpickle pickles by reference, so the workers must be able to
+    import the package too; run from a working directory outside the
+    repo, they would otherwise fail with ModuleNotFoundError. A catalog
+    query gets its input only through :func:`_t` (stored tables) and
+    :func:`_artifact` (derived copies), and those two are the only
+    callers, so every query ships the package before it reads."""
+    key = id(spark.sparkContext)
+    if key in _PKG_SHIPPED:
+        return
+    import os
+
     # the TOP-LEVEL package dir (this file lives in catalog/)
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(tempfile.gettempdir(), "knime_core_columnar_spark_pkg.zip")
-    tmp = zpath + f".{os.getpid()}.part"
-    with zipfile.ZipFile(tmp, "w") as z:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    z.write(full, rel)
-    os.replace(tmp, zpath)
-    spark.sparkContext.addPyFile(zpath)
+    spark.sparkContext.addPyFile(_pkg_zip(pkg_dir))
     _PKG_SHIPPED.add(key)
 
 
@@ -239,18 +259,46 @@ def _artifact_tag(sf_dir: str, *tables: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
 
 
-def _publish_dir(tmp: str, final: str) -> None:
-    """Atomically publish a staged artifact directory; if a concurrent
-    session won the rename race, keep theirs (same content by tag)."""
+def _artifact_path(name: str, tag: str) -> str:
+    """Where the derived artifact ``name`` with cache tag ``tag`` lives."""
+    return f"/tmp/kccs_{name}_{tag}"
+
+
+def _artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    tables: tuple[str, ...],
+    write: Callable[[str], object],
+) -> str:
+    """Path of the derived artifact ``name`` (a CSV export, partitioned
+    copy, container export or sketch table of the catalog ``tables``),
+    built on first use and reused after. The path carries the
+    :func:`_artifact_tag` of ``tables``, so a changed source gets a new
+    artifact. When the path is absent, ``write(staging)`` writes the
+    artifact into a ``.part<pid>`` staging directory, which is then
+    renamed into place. If ``write`` raises, the staging directory is
+    removed and the error re-raised; if a concurrent session published
+    the same tag first, its copy is kept and the staging directory is
+    removed. Ships the package first, like :func:`_t`, so a query whose
+    artifact is warm still has it on the workers."""
     import os
     import shutil
 
+    _ensure_pkg_on_executors(spark)
+    path = _artifact_path(name, _artifact_tag(sf_dir, *tables))
+    if os.path.isdir(path):
+        return path
+    staging = f"{path}.part{os.getpid()}"
     try:
-        os.rename(tmp, final)
+        write(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    try:
+        os.rename(staging, path)
     except OSError:
-        if os.path.isdir(final):
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
+        shutil.rmtree(staging, ignore_errors=True)
+        if not os.path.isdir(path):
             raise
-
-
+    return path

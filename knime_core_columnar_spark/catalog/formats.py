@@ -9,9 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.catalog._registry import (
-    _artifact_tag,
-    _ensure_pkg_on_executors,
-    _publish_dir,
+    _artifact,
     _t,
     query,
 )
@@ -100,18 +98,11 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted in tests/test_plans.py). At 100 TB this is the difference
     between scanning 40 TB and scanning 16 TB; the reference's store has
     no partition dimension at all (SURVEY §4)."""
-    import os
-
-    _ensure_pkg_on_executors(spark)
-    tag = _artifact_tag(sf_dir, "events")
-    part_dir = f"/tmp/kccs_events_by_type_{tag}"
-    if not os.path.isdir(part_dir):
-        (
-            _t(spark, sf_dir, "events")
-            .write.mode("overwrite").partitionBy("event_type")
-            .parquet(f"{part_dir}.part{os.getpid()}")
-        )
-        _publish_dir(f"{part_dir}.part{os.getpid()}", part_dir)
+    part_dir = _artifact(
+        spark, sf_dir, "events_by_type", ("events",),
+        lambda out: _t(spark, sf_dir, "events")
+        .write.mode("overwrite").partitionBy("event_type").parquet(out),
+    )
     ev = read_parquet(spark, part_dir)
     return (
         ev.filter(F.col("event_type").isin("click", "purchase"))
@@ -161,7 +152,6 @@ def audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_audio_features,
     )
 
-    _ensure_pkg_on_executors(spark)
     d = attach_binary_payload(_t(spark, sf_dir, "documents"), "text")
     return decode_audio_features(d, "doc_id", "payload")
 
@@ -189,18 +179,14 @@ def avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/avro.py). Longs/doubles/strings are binary-exact through the
     Avro wire format, so the result hashes identically to the parquet
     oracle."""
-    import os
-
     from knime_core_columnar_spark.sources.avro import write_avro
     from knime_core_columnar_spark.sources.io import read_avro
 
-    _ensure_pkg_on_executors(spark)
-    tag = _artifact_tag(sf_dir, "customer")
-    avro_dir = f"/tmp/kccs_customer_avro_{tag}"
-    if not os.path.isdir(avro_dir):
-        staging = f"{avro_dir}.part{os.getpid()}"
-        write_avro(_t(spark, sf_dir, "customer"), staging, codec="deflate")
-        _publish_dir(staging, avro_dir)
+    avro_dir = _artifact(
+        spark, sf_dir, "customer_avro", ("customer",),
+        lambda out: write_avro(
+            _t(spark, sf_dir, "customer"), out, codec="deflate"),
+    )
     t = read_avro(spark, avro_dir, key_columns=["c_custkey"])
     return t.df.select(
         "_row_key", "c_custkey", "c_name", "c_nationkey", "c_acctbal",
@@ -425,26 +411,16 @@ def _webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip byte-exactly — ``all_match`` is the engine's own parity
     check, asserted TRUE by the oracle alongside the exactly-replayable
     per-shard sample counts."""
-    import os
-
-    from knime_core_columnar_spark.catalog._registry import (
-        _artifact_tag,
-        _ensure_pkg_on_executors,
-        _publish_dir,
-    )
     from knime_core_columnar_spark.sources.webdataset import (
         read_webdataset,
         write_webdataset,
     )
 
-    _ensure_pkg_on_executors(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = _artifact_tag(sf_dir, "documents")
-    wds_dir = f"/tmp/kccs_webdataset_{tag}"
-    if not os.path.isdir(wds_dir):
-        staging = f"{wds_dir}.part{os.getpid()}"
-        write_webdataset(d, staging, key_col="doc_id", n_shards=8)
-        _publish_dir(staging, wds_dir)
+    wds_dir = _artifact(
+        spark, sf_dir, "webdataset", ("documents",),
+        lambda out: write_webdataset(d, out, key_col="doc_id", n_shards=8),
+    )
     back = (
         read_webdataset(spark, wds_dir)
         .filter(F.col("field") == "text")
@@ -467,7 +443,7 @@ def _webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _warc_roundtrip_frame(
     spark: SparkSession,
     sf_dir: str,
-    dir_prefix: str,
+    artifact: str,
     http_wrap: bool,
     payload_col: str,
     extra_aggs: list | None = None,
@@ -478,30 +454,21 @@ def _warc_roundtrip_frame(
     per file — record count plus the byte-exact payload parity flag
     (``all_match``). ``payload_col`` selects which read_warc column
     must round-trip (``content`` for plain records, ``payload`` for
-    nested-HTTP ones); ``extra_aggs`` appends caller-specific checks."""
-    import os
-
-    from knime_core_columnar_spark.catalog._registry import (
-        _artifact_tag,
-        _ensure_pkg_on_executors,
-        _publish_dir,
-    )
+    nested-HTTP ones); ``extra_aggs`` appends caller-specific checks;
+    ``artifact`` names the cached export."""
     from knime_core_columnar_spark.sources.warc import read_warc, write_warc
 
-    _ensure_pkg_on_executors(spark)
     d = _t(spark, sf_dir, "documents").select(
         F.concat(F.lit("https://example.test/doc/"),
                  F.col("doc_id").cast("string")).alias("url"),
         "text",
         "doc_id",
     )
-    tag = _artifact_tag(sf_dir, "documents")
-    warc_dir = f"/tmp/{dir_prefix}_{tag}"
-    if not os.path.isdir(warc_dir):
-        staging = f"{warc_dir}.part{os.getpid()}"
-        write_warc(d, staging, url_col="url", content_col="text",
-                   key_col="url", n_files=8, http_wrap=http_wrap)
-        _publish_dir(staging, warc_dir)
+    warc_dir = _artifact(
+        spark, sf_dir, artifact, ("documents",),
+        lambda out: write_warc(d, out, url_col="url", content_col="text",
+                               key_col="url", n_files=8, http_wrap=http_wrap),
+    )
     back = read_warc(spark, warc_dir).select(
         F.regexp_extract("file", r"part-(\d+)", 1).cast("bigint")
         .alias("file_id"),
@@ -544,7 +511,7 @@ def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine's own parity check, asserted TRUE by the oracle
     alongside exactly-replayed per-file record counts."""
     return _warc_roundtrip_frame(
-        spark, sf_dir, "kccs_warc", http_wrap=False, payload_col="content"
+        spark, sf_dir, "warc", http_wrap=False, payload_col="content"
     )
 
 
@@ -581,7 +548,7 @@ def _warc_http_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-replayed per-file record counts. Shares the roundtrip
     harness with ``warc_roundtrip`` (formats._warc_roundtrip_frame)."""
     return _warc_roundtrip_frame(
-        spark, sf_dir, "kccs_warc_http", http_wrap=True,
+        spark, sf_dir, "warc_http", http_wrap=True,
         payload_col="payload",
         extra_aggs=[
             F.min(
@@ -903,7 +870,6 @@ def _png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         png_pixel_stats,
     )
 
-    _ensure_pkg_on_executors(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
 
     def encode(batches):

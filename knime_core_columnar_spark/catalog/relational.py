@@ -15,9 +15,9 @@ from knime_core_columnar_spark.schema import ROW_KEY
 from knime_core_columnar_spark.table import ColumnarTable
 
 from knime_core_columnar_spark.catalog._registry import (
+    _artifact_path,
     _artifact_tag,
     _dec,
-    _ensure_pkg_on_executors,
     _t,
     _table_meta,
     query,
@@ -1112,9 +1112,8 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketing the fact table once amortizes every downstream key join."""
     import os
 
-    _ensure_pkg_on_executors(spark)
     tag = _artifact_tag(sf_dir, "orders", "customer")
-    base = f"/tmp/kccs_bucketed_{tag}"
+    base = _artifact_path("bucketed", tag)
     specs = [("orders", f"bk_orders_{tag}", "o_custkey"),
              ("customer", f"bk_customer_{tag}", "c_custkey")]
     for src, name, key in specs:

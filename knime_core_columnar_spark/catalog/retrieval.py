@@ -9,7 +9,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.catalog._registry import (
-    _ensure_pkg_on_executors,
     _t,
     _table_meta,
     _tw,
@@ -401,7 +400,6 @@ def pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_train,
     )
 
-    _ensure_pkg_on_executors(spark)
     e = _t(spark, sf_dir, "embeddings")
     cb = pq_train(
         e, m=4, ks=16, corpus_count=_table_meta(spark, sf_dir, "embeddings").rows

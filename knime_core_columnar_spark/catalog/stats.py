@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.catalog._registry import (
+    _artifact,
     _dec,
     _t,
     _table_meta,
@@ -2408,28 +2409,17 @@ def _hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a hard gate red; the tight 3σ bound is asserted where it can be
     tolerance-tagged, tests/test_r8_round8.py), asserted TRUE by the
     oracle alongside the exact counts."""
-    import os
-
-    from knime_core_columnar_spark.catalog._registry import (
-        _artifact_tag,
-        _ensure_pkg_on_executors,
-        _publish_dir,
-    )
     from knime_core_columnar_spark.operators.sketch import (
         hll_rollup,
         hll_sketch_table,
     )
 
-    _ensure_pkg_on_executors(spark)
     d = _t(spark, sf_dir, "documents")
-    tag = _artifact_tag(sf_dir, "documents")
-    skt_dir = f"/tmp/kccs_hll_sketches_{tag}"
-    if not os.path.isdir(skt_dir):
-        staging = f"{skt_dir}.part{os.getpid()}"
-        hll_sketch_table(d, ["source", "lang"], "doc_id").write.mode(
-            "overwrite"
-        ).parquet(staging)
-        _publish_dir(staging, skt_dir)
+    skt_dir = _artifact(
+        spark, sf_dir, "hll_sketches", ("documents",),
+        lambda out: hll_sketch_table(d, ["source", "lang"], "doc_id")
+        .write.mode("overwrite").parquet(out),
+    )
     stored = read_parquet(spark, skt_dir)
     roll = hll_rollup(stored, ["source"])
     exact = d.groupBy("source").agg(

@@ -19,9 +19,7 @@ from knime_core_columnar_spark.schema import ROW_KEY
 from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 
 from knime_core_columnar_spark.catalog._registry import (
-    _artifact_tag,
-    _ensure_pkg_on_executors,
-    _publish_dir,
+    _artifact,
     _t,
     _tw,
     query,
@@ -428,6 +426,61 @@ def map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Saved-workflow inputs: CSV exports of catalog tables (the CSV Reader
+# nodes' files) and the on-disk workflow directory the compiler loads
+# ---------------------------------------------------------------------------
+
+_LINEITEM_CSV_COLS = ["l_orderkey", "l_linenumber", "l_returnflag",
+                      "l_linestatus", "l_quantity", "l_extendedprice"]
+
+
+def _csv_export(spark: SparkSession, sf_dir: str, name: str, table: str,
+                cols: list[str]) -> str:
+    """Path of ``cols`` of catalog ``table`` exported once to a headed
+    CSV directory, the derived artifact ``name``."""
+    return _artifact(
+        spark, sf_dir, name, (table,),
+        lambda out: _t(spark, sf_dir, table).select(cols)
+        .write.mode("overwrite").option("header", "true").csv(out),
+    )
+
+
+def _lineitem_csv(spark: SparkSession, sf_dir: str) -> str:
+    return _csv_export(spark, sf_dir, "workflow_csv", "lineitem",
+                       _LINEITEM_CSV_COLS)
+
+
+def _orders_csv(spark: SparkSession, sf_dir: str) -> str:
+    return _csv_export(spark, sf_dir, "workflow_dag_csv", "orders",
+                       ["o_orderkey", "o_custkey", "o_orderstatus",
+                        "o_totalprice", "o_orderpriority"])
+
+
+def _load_workflow(node_files: dict[str, str], workflow_knime: str):
+    """Write a saved-workflow directory (``<node>/settings.xml`` for each
+    entry of ``node_files``, plus ``workflow.knime``) into a temporary
+    directory and compile it with
+    :func:`~knime_core_columnar_spark.plans.workflow.load_workflow_program`,
+    which reads every file before it returns; the directory is removed
+    on return."""
+    import os
+    import tempfile
+
+    from knime_core_columnar_spark.plans.workflow import load_workflow_program
+
+    with tempfile.TemporaryDirectory(prefix="kccs_wf_") as wf_dir:
+        for node, xml in node_files.items():
+            os.makedirs(os.path.join(wf_dir, node))
+            with open(os.path.join(wf_dir, node, "settings.xml"), "w",
+                      encoding="utf-8") as f:
+                f.write(xml)
+        with open(os.path.join(wf_dir, "workflow.knime"), "w",
+                  encoding="utf-8") as f:
+            f.write(workflow_knime)
+        return load_workflow_program(wf_dir)
+
+
 @query(
     "simple_linear_workflow",
     """
@@ -454,27 +507,13 @@ def simple_linear_workflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_knime_workflow.py. Spark CSV round-trips doubles via
     shortest-repr printing, so values stay bit-exact against the
     parquet-based oracle."""
-    import os
-
     from knime_core_columnar_spark.plans.workflow import (
         WorkflowNode,
         compile_workflow,
     )
     from knime_core_columnar_spark.sources.io import read_csv
 
-    _ensure_pkg_on_executors(spark)
-    cols = ["l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus",
-            "l_quantity", "l_extendedprice"]
-    tag = _artifact_tag(sf_dir, "lineitem")
-    csv_dir = f"/tmp/kccs_workflow_csv_{tag}"
-    if not os.path.isdir(csv_dir):
-        (
-            _t(spark, sf_dir, "lineitem")
-            .select(cols)
-            .write.mode("overwrite").option("header", "true")
-            .csv(f"{csv_dir}.part{os.getpid()}")
-        )
-        _publish_dir(f"{csv_dir}.part{os.getpid()}", csv_dir)
+    csv_dir = _lineitem_csv(spark, sf_dir)
     schema = ("l_orderkey long, l_linenumber int, l_returnflag string, "
               "l_linestatus string, l_quantity double, l_extendedprice double")
     t = read_csv(  # CSV Reader (bound per the node's CsvSourceSpec role)
@@ -486,7 +525,7 @@ def simple_linear_workflow(spark: SparkSession, sf_dir: str) -> DataFrame:
             factory="org.knime.base.node.preproc.filter.column."
                     "DataColumnSpecFilterNodeFactory",
             model={"column-filter": {"filter-type": "STANDARD",
-                                     "included_names": cols}},
+                                     "included_names": _LINEITEM_CSV_COLS}},
         ),
         WorkflowNode(  # String Manipulation (#3)'s model shape
             factory="org.knime.base.node.preproc.stringmanipulation."
@@ -690,7 +729,6 @@ def _training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         language_mix_gate,
     )
 
-    _ensure_pkg_on_executors(spark)
     d = _tw(spark, sf_dir, "documents")
     # r11 optimization (guide §2.4 / §1.2): the language gate is a
     # single-expression FILTER on the one corpus scan instead of an
@@ -896,30 +934,11 @@ def _workflow_compile_execute(
     Every call re-pays parse+compile, which is ms-level; execution
     dominates, certifying that the settings.xml tier adds no per-run
     cost over the hand-built chain (simple_linear_workflow)."""
-    from knime_core_columnar_spark.catalog._registry import (
-        _artifact_tag,
-        _publish_dir,
-    )
     from knime_core_columnar_spark.plans.workflow import compile_workflow
     from knime_core_columnar_spark.sources.io import read_csv
 
-    import os
-
-    cols = ["l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus",
-            "l_quantity", "l_extendedprice"]
-    tag = _artifact_tag(sf_dir, "lineitem")
-    csv_dir = f"/tmp/kccs_workflow_csv_{tag}"
-    if not os.path.isdir(csv_dir):
-        (
-            _t(spark, sf_dir, "lineitem")
-            .select(cols)
-            .write.mode("overwrite").option("header", "true")
-            .csv(f"{csv_dir}.part{os.getpid()}")
-        )
-        _publish_dir(f"{csv_dir}.part{os.getpid()}", csv_dir)
-
     xml_texts = [
-        _WF_CSV_READER_XML.replace("{csv_path}", csv_dir),
+        _WF_CSV_READER_XML.replace("{csv_path}", _lineitem_csv(spark, sf_dir)),
         _WF_COLUMN_FILTER_XML,
         _WF_STRING_MANIP_XML,
         _WF_ROW_FILTER_XML,
@@ -1131,50 +1150,18 @@ def _workflow_dag_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse+graph+compile cost is ms-level, execution dominates — the
     same certification workflow_compile_execute makes for the linear
     tier, now for the DAG tier."""
-    from knime_core_columnar_spark.catalog._registry import (
-        _artifact_tag,
-        _publish_dir,
-    )
-    from knime_core_columnar_spark.plans.workflow import load_workflow_program
     from knime_core_columnar_spark.sources.io import read_csv
 
-    import os
-    import tempfile
-
-    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-            "o_orderpriority"]
-    tag = _artifact_tag(sf_dir, "orders")
-    csv_dir = f"/tmp/kccs_workflow_dag_csv_{tag}"
-    if not os.path.isdir(csv_dir):
-        (
-            _t(spark, sf_dir, "orders")
-            .select(cols)
-            .write.mode("overwrite").option("header", "true")
-            .csv(f"{csv_dir}.part{os.getpid()}")
-        )
-        _publish_dir(f"{csv_dir}.part{os.getpid()}", csv_dir)
-
-    wf_dir = tempfile.mkdtemp(prefix="kccs_wf_dag_")
-    node_files = {
-        "CSV Reader (#1)": _WF_DAG_CSV_READER_XML.replace(
-            "{csv_path}", csv_dir),
-        "CSV Reader (#2)": _WF_DAG_CSV_READER_XML.replace(
-            "{csv_path}", csv_dir),
+    reader = _WF_DAG_CSV_READER_XML.replace(
+        "{csv_path}", _orders_csv(spark, sf_dir))
+    prog = _load_workflow({
+        "CSV Reader (#1)": reader,
+        "CSV Reader (#2)": reader,
         "Row Filter (#3)": _WF_DAG_ROW_FILTER_STATUS_XML,
         "Row Filter (#4)": _WF_DAG_ROW_FILTER_PRICE_XML,
         "Concatenate (#5)": _WF_DAG_CONCATENATE_XML,
         "Column Filter (#6)": _WF_DAG_COLUMN_FILTER_XML,
-    }
-    for d, xml in node_files.items():
-        os.makedirs(os.path.join(wf_dir, d), exist_ok=True)
-        with open(os.path.join(wf_dir, d, "settings.xml"), "w",
-                  encoding="utf-8") as f:
-            f.write(xml)
-    with open(os.path.join(wf_dir, "workflow.knime"), "w",
-              encoding="utf-8") as f:
-        f.write(_WF_DAG_WORKFLOW_KNIME)
-
-    prog = load_workflow_program(wf_dir)
+    }, _WF_DAG_WORKFLOW_KNIME)
     bindings = {}
     for name, spec in prog.csv_specs.items():
         schema = ", ".join(f"{n} {t}" for n, t in spec.columns)
@@ -1349,58 +1336,20 @@ def _workflow_join_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is semantically irreducible; at 100 TB AQE's skew split
     handles hot customers, and inner/left variants of the same compiled
     plan do broadcast the dim side."""
-    from knime_core_columnar_spark.catalog._registry import (
-        _artifact_tag,
-        _publish_dir,
-    )
-    from knime_core_columnar_spark.plans.workflow import load_workflow_program
     from knime_core_columnar_spark.sources.io import read_csv
 
-    import os
-    import tempfile
-
-    tag = _artifact_tag(sf_dir, "orders")
-    orders_csv = f"/tmp/kccs_workflow_dag_csv_{tag}"
-    if not os.path.isdir(orders_csv):
-        (
-            _t(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_orderstatus",
-                    "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite").option("header", "true")
-            .csv(f"{orders_csv}.part{os.getpid()}")
-        )
-        _publish_dir(f"{orders_csv}.part{os.getpid()}", orders_csv)
-    ctag = _artifact_tag(sf_dir, "customer")
-    customer_csv = f"/tmp/kccs_workflow_join_csv_{ctag}"
-    if not os.path.isdir(customer_csv):
-        (
-            _t(spark, sf_dir, "customer")
-            .select("c_custkey", "c_name", "c_nationkey", "c_acctbal",
-                    "c_mktsegment")
-            .write.mode("overwrite").option("header", "true")
-            .csv(f"{customer_csv}.part{os.getpid()}")
-        )
-        _publish_dir(f"{customer_csv}.part{os.getpid()}", customer_csv)
-
-    wf_dir = tempfile.mkdtemp(prefix="kccs_wf_join_")
-    node_files = {
+    customer_csv = _csv_export(
+        spark, sf_dir, "workflow_join_csv", "customer",
+        ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
+    )
+    prog = _load_workflow({
         "CSV Reader (#1)": _WF_DAG_CSV_READER_XML.replace(
-            "{csv_path}", orders_csv),
+            "{csv_path}", _orders_csv(spark, sf_dir)),
         "Row Filter (#2)": _WF_JOIN_ROW_FILTER_XML,
         "CSV Reader (#3)": _WF_JOIN_CUSTOMER_READER_XML.replace(
             "{csv_path}", customer_csv),
         "Joiner (#4)": _WF_JOIN_JOINER_XML,
-    }
-    for d, xml in node_files.items():
-        os.makedirs(os.path.join(wf_dir, d), exist_ok=True)
-        with open(os.path.join(wf_dir, d, "settings.xml"), "w",
-                  encoding="utf-8") as f:
-            f.write(xml)
-    with open(os.path.join(wf_dir, "workflow.knime"), "w",
-              encoding="utf-8") as f:
-        f.write(_WF_JOIN_WORKFLOW_KNIME)
-
-    prog = load_workflow_program(wf_dir)
+    }, _WF_JOIN_WORKFLOW_KNIME)
     keys = {"source": ["o_orderkey"], "source_2": ["c_custkey"]}
     bindings = {}
     for name, spec in prog.csv_specs.items():
@@ -1479,44 +1428,13 @@ def _workflow_topk_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     back — at 100 TB the only moving parts are a partial-distinct
     shuffle of ONE column and a k-row broadcast; there is no global
     sort and no single-partition window anywhere in the plan."""
-    from knime_core_columnar_spark.catalog._registry import (
-        _artifact_tag,
-        _publish_dir,
-    )
-    from knime_core_columnar_spark.plans.workflow import load_workflow_program
     from knime_core_columnar_spark.sources.io import read_csv
 
-    import os
-    import tempfile
-
-    tag = _artifact_tag(sf_dir, "orders")
-    orders_csv = f"/tmp/kccs_workflow_dag_csv_{tag}"
-    if not os.path.isdir(orders_csv):
-        (
-            _t(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_orderstatus",
-                    "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite").option("header", "true")
-            .csv(f"{orders_csv}.part{os.getpid()}")
-        )
-        _publish_dir(f"{orders_csv}.part{os.getpid()}", orders_csv)
-
-    wf_dir = tempfile.mkdtemp(prefix="kccs_wf_topk_")
-    node_files = {
+    prog = _load_workflow({
         "CSV Reader (#1)": _WF_DAG_CSV_READER_XML.replace(
-            "{csv_path}", orders_csv),
+            "{csv_path}", _orders_csv(spark, sf_dir)),
         "Top k Selector (#2)": _WF_TOPK_XML,
-    }
-    for d, xml in node_files.items():
-        os.makedirs(os.path.join(wf_dir, d), exist_ok=True)
-        with open(os.path.join(wf_dir, d, "settings.xml"), "w",
-                  encoding="utf-8") as f:
-            f.write(xml)
-    with open(os.path.join(wf_dir, "workflow.knime"), "w",
-              encoding="utf-8") as f:
-        f.write(_WF_TOPK_WORKFLOW_KNIME)
-
-    prog = load_workflow_program(wf_dir)
+    }, _WF_TOPK_WORKFLOW_KNIME)
     (name,) = prog.sources
     spec = prog.csv_specs[name]
     schema = ", ".join(f"{n} {t}" for n, t in spec.columns)

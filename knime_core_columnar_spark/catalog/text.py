@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from knime_core_columnar_spark.operators.psl import registered_domain_sql
 
 from knime_core_columnar_spark.catalog._registry import (
-    _ensure_pkg_on_executors,
     _t,
     _table_meta,
     _tw,
@@ -325,7 +324,6 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from knime_core_columnar_spark.operators.packing import pack_sequences
     from knime_core_columnar_spark.operators.text import token_count
 
-    _ensure_pkg_on_executors(spark)
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", token_count("text").alias("n_tokens"))
     return pack_sequences(toks, "doc_id", "n_tokens", capacity=512, n_streams=8)
@@ -2363,7 +2361,6 @@ def _packed_sequences_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         assemble_packed_sequences,
     )
 
-    _ensure_pkg_on_executors(spark)
     d = _t(spark, sf_dir, "documents")
     return assemble_packed_sequences(
         d, "doc_id", "text", capacity=512, n_streams=8,

@@ -1,7 +1,9 @@
 """Catalog registry invariants: one registration path that refuses a
-duplicate name, and a query order that does not depend on the order in
-which the family modules are imported."""
+duplicate name, a query order that does not depend on the order in
+which the family modules are imported, and one way for a query to get
+its inputs."""
 
+import ast
 import json
 import os
 import subprocess
@@ -61,3 +63,30 @@ def test_registry_independent_of_family_import_order():
     assert reverse["order"] == sorted(
         catalog.QUERIES, key=lambda n: (catalog.EVIDENCE.get(n, 0), n)
     )
+
+
+def test_inputs_only_through_registry_helpers():
+    """Artifact paths, staging, temporary directories and package
+    shipping live in ``_registry`` alone, where only ``_t`` (stored
+    tables) and ``_artifact`` (derived copies) ship the package."""
+    from knime_core_columnar_spark import catalog
+
+    pkg = os.path.dirname(catalog.__file__)
+    banned = ("_publish_dir", "_ensure_pkg_on_executors", "/tmp/kccs_", "mkdtemp")
+    for fname in sorted(os.listdir(pkg)):
+        if fname.endswith(".py") and fname != "_registry.py":
+            with open(os.path.join(pkg, fname), encoding="utf-8") as f:
+                src = f.read()
+            assert [b for b in banned if b in src] == [], fname
+
+    with open(os.path.join(pkg, "_registry.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    callers = sorted(
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_ensure_pkg_on_executors"
+    )
+    assert callers == ["_artifact", "_t"]

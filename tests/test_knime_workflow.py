@@ -125,12 +125,10 @@ def test_catalog_query_matches_hand_coded_chain(spark):
 
     cols = ["l_orderkey", "l_linenumber", "l_returnflag", "l_linestatus",
             "l_quantity", "l_extendedprice"]
-    csv_dir = None
-    # the query materializes its CSV artifact under a deterministic tag;
-    # recompute the same path through the catalog helper
-    from knime_core_columnar_spark.catalog._registry import _artifact_tag
+    # the same CSV artifact the query read, through the query's helper
+    from knime_core_columnar_spark.catalog.table_algebra import _lineitem_csv
 
-    csv_dir = f"/tmp/kccs_workflow_csv_{_artifact_tag(sf_dir, 'lineitem')}"
+    csv_dir = _lineitem_csv(spark, sf_dir)
     schema = ("l_orderkey long, l_linenumber int, l_returnflag string, "
               "l_linestatus string, l_quantity double, l_extendedprice double")
     t = read_csv(spark, csv_dir, schema=schema,
