@@ -29,6 +29,7 @@ from knime_core_columnar_spark.operators.text import (
     word_shingles,
 )
 from knime_core_columnar_spark.schema import ROW_KEY
+from knime_core_columnar_spark.session import checkpoint
 from knime_core_columnar_spark.table import ColumnarTable
 
 
@@ -347,17 +348,17 @@ def minhash_lsh_candidates(
     in-bucket self-join → distinct pairs. The only shuffled payload is
     (id, band_key); document text never moves.
 
-    The band table is lazily localCheckpoint-ed before the self-join:
-    the executed plan shows ReusedExchange does NOT fire across the
-    join's two sides (0 reuses, 2 parquet scans), so without it the
-    signature pass (shingle explode + num_perm min-hash aggregation,
-    the compute-heavy stage of the whole near-dup family) runs TWICE
-    per call. The checkpoint materializes the (id, band, key) rows —
-    exactly the index incremental_dedup_admit persists — once, and
-    both join sides read it."""
-    banded = minhash_band_table(
+    The band table is checkpointed before the self-join: the executed
+    plan shows ReusedExchange does NOT fire across the join's two sides
+    (0 reuses, 2 parquet scans), so without it the signature pass
+    (shingle explode + num_perm min-hash aggregation, the compute-heavy
+    stage of the whole near-dup family) runs TWICE per call. The
+    checkpoint materializes the (id, band, key) rows — exactly the
+    index incremental_dedup_admit persists — once, and both join sides
+    read it."""
+    banded = checkpoint(minhash_band_table(
         df, id_col, text_col, num_perm, bands, shingle_n
-    ).localCheckpoint(eager=False)
+    ))
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -466,18 +467,11 @@ def ngram_jaccard_pairs(
         # survivors are a small fraction of the corpus; Catalyst cannot
         # infer this restriction through the aggregate on its own).
         # The candidate frame is referenced three times below (id
-        # filter + both verify joins) — localCheckpoint computes the
+        # filter + both verify joins) — the checkpoint computes the
         # (small, LSH-survivor-sized) pair set once instead of
         # re-running the whole candidate-generation subtree per
-        # reference. Eager: the materialization runs as its own small
-        # job (measured faster than lazy, which blocks the first
-        # consumer stage's pipelining on the checkpoint write). Two
-        # documented consequences: CONSTRUCTING this frame runs the
-        # candidate-generation job immediately (even for explain()),
-        # and checkpoint blocks are unreplicated — an executor loss
-        # mid-query fails the query instead of recomputing (swap to a
-        # reliable checkpoint dir if that matters on a real cluster).
-        candidates = candidates.localCheckpoint(eager=True)
+        # reference.
+        candidates = checkpoint(candidates)
         ids = (
             candidates.select(F.col("id_a").alias(id_col))
             .union(candidates.select(F.col("id_b").alias(id_col)))
@@ -607,7 +601,7 @@ def simhash_near_pairs(
     # same ReusedExchange gap as minhash_lsh_candidates — without the
     # checkpoint the per-token md5 signature pass runs twice (once per
     # self-join side; the executed plan shows 0 reuses, 2 scans).
-    chunks = chunks.localCheckpoint(eager=False)
+    chunks = checkpoint(chunks)
     a, b = chunks.alias("a"), chunks.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -653,7 +647,7 @@ def connected_components(
     the diameter: a 64-chain converges in ~8 rounds instead of 63,
     and ``max_iter=20`` covers any physically possible diameter.
     Small-diameter graphs converge before ``compress_from`` and never
-    pay for the extra join. ``localCheckpoint`` truncates the lineage
+    pay for the extra join. A checkpoint truncates the lineage
     each round so the plan does not grow with the iteration count.
     """
     # materialize the symmetric edge list ONCE — the caller's edge
@@ -663,25 +657,24 @@ def connected_components(
     # actions recomputes the whole derivation (measured 122 s → 40 s
     # for entity_resolution at sf0.1). Same discipline as
     # graph.pagerank_scaled's adj materialization.
-    sym = edges.select(
+    sym = checkpoint(edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).unionByName(
         edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-    ).localCheckpoint(eager=False)
+    ))
     # seed labels at min(node, min neighbor) — the node-distinct
     # pass was a groupBy on the same (src) shuffle anyway, so folding
     # min(dst) into it runs propagation round 1 for free: one fewer
     # BSP round (join + aggregate + checkpoint + probe) on every call.
     # Fixpoint unchanged — labels still only ever decrease toward the
     # component minimum along edges.
-    labels = (
+    labels = checkpoint(
         sym.groupBy("src")
         .agg(F.min("dst").alias("__mn"))
         .select(
             F.col("src").alias("node"),
             F.least(F.col("src"), F.col("__mn")).alias("label"),
         )
-        .localCheckpoint(eager=False)
     )
     changed = 0
     for rnd in range(max_iter):
@@ -690,25 +683,20 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # every checkpoint in the loop is LAZY and the convergence
-        # count is the action that materializes it — ONE driver action
-        # per superstep (an eager checkpoint + separate probe count
-        # would be 2, plus a third for the pointer-doubling hop). The lazy
-        # checkpoint still truncates the logical plan at build time
-        # (the returned frame wraps a LogicalRDD), and the count's
-        # filter cannot prune columns through that RDD boundary, so the
-        # full label frame is persisted by the same job that probes it.
+        # the convergence count is the one driver action per superstep;
+        # it also writes this round's checkpoint, whose full label
+        # frame the count's filter cannot prune through the RDD
+        # boundary.
         upd = F.least(
             F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
         )
-        new_labels = (
+        new_labels = checkpoint(
             labels.join(nbr, labels["node"] == nbr["src"], "left")
             .select(
                 F.col("node"),
                 upd.alias("__new"),
                 (upd < F.col("label")).alias("__changed"),
             )
-            .localCheckpoint(eager=False)
         )
         changed = new_labels.filter(F.col("__changed")).count()
         labels = new_labels.select("node", F.col("__new").alias("label"))
@@ -728,7 +716,7 @@ def connected_components(
             hop = labels.select(
                 F.col("node").alias("__ln"), F.col("label").alias("__ll")
             )
-            labels = (
+            labels = checkpoint(
                 labels.join(hop, labels["label"] == hop["__ln"], "left")
                 .select(
                     "node",
@@ -737,10 +725,6 @@ def connected_components(
                         F.coalesce(F.col("__ll"), F.col("label")),
                     ).alias("label"),
                 )
-                # lazy: the NEXT round's convergence count (or the
-                # caller's action, if this was the last round)
-                # materializes the hop — no dedicated job for it
-                .localCheckpoint(eager=False)
             )
     if changed > 0:
         raise RuntimeError(
@@ -1125,7 +1109,7 @@ def dup_span_apply(
     The rebuild joins cut spans back to the corpus id-keyed and drops
     tokens with a per-row array filter (no explode of the corpus).
 
-    The gram stream is materialized ONCE via a lazy localCheckpoint — it
+    The gram stream is materialized ONCE via a checkpoint — it
     feeds both the multiplicity/winner aggregation and the loser join,
     and without materialization the token-volume gram emission
     re-executes per consumer. Measured: 2× end-to-end at sf0.1
@@ -1147,9 +1131,9 @@ def dup_span_apply(
     # one gram pass, not two: the stream feeds BOTH the multiplicity/
     # winner aggregation and the loser join; without materialization the
     # token-volume gram emission re-executes for each consumer (measured
-    # 1.5x at sf0.1). localCheckpoint spills ~24-byte rows to executor-
-    # local disk — shuffle-sized, the same budget winnow_overlap pays.
-    grams = _gram_rows(df, id_col, text_col, k).localCheckpoint(eager=False)
+    # 1.5x at sf0.1). The checkpoint holds ~24-byte rows — shuffle-
+    # sized, the same budget winnow_overlap pays.
+    grams = checkpoint(_gram_rows(df, id_col, text_col, k))
     flagged_hashes = (
         grams.groupBy("__h1", "__h2")
         .agg(
@@ -1325,13 +1309,12 @@ def prefix_filter_jaccard_pairs(
     # The (id, shingle-hash) frame feeds THREE consumers (the DF
     # aggregation, the prefix ranking, and the verify arrays); the
     # shingle pass behind it (posexplode + window + distinct) is the
-    # most expensive subtree here, so materialize it once — lazy
-    # localCheckpoint: written to executor block storage on first
-    # action, the same I/O class as the shuffles it feeds (measured
-    # ~2× end-to-end at 50k docs vs recomputing it per consumer).
-    rows = shingle_rows(df, id_col, text_col, shingle_n).select(
+    # most expensive subtree here, so materialize it once — the same
+    # I/O class as the shuffles it feeds (measured ~2× end-to-end at
+    # 50k docs vs recomputing it per consumer).
+    rows = checkpoint(shingle_rows(df, id_col, text_col, shingle_n).select(
         F.col(id_col), base_hash60(F.col("__s")).alias("__h")
-    ).localCheckpoint(eager=False)
+    ))
     freq = rows.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     ranked = (
         rows.join(freq, "__h")
@@ -1645,7 +1628,7 @@ def containment_pairs(
             .select("__h")
         )
         rows = rows.join(rare, "__h", "left_semi")
-    rows = rows.localCheckpoint(eager=False)
+    rows = checkpoint(rows)
     sizes = rows.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
     a = rows.select(F.col(id_col).alias("id_a"), "__h")
     b = rows.select(F.col(id_col).alias("id_b"), "__h")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from knime_core_columnar_spark.session import checkpoint
+
 
 def pagerank_scaled(
     edges: DataFrame,
@@ -43,7 +45,7 @@ def pagerank_scaled(
 
     Scale shape: per superstep, only (dst, int64 contribution) pairs
     shuffle — never adjacency or payload. ``edges`` joined with out-degrees
-    once and localCheckpoint'ed so the per-iteration plan re-reads a
+    once and checkpointed so the per-iteration plan re-reads a
     materialized edge frame instead of recomputing the (possibly
     expensive: LSH candidates, verification joins) edge derivation each
     round; lineage is truncated per round like connected_components.
@@ -60,15 +62,11 @@ def pagerank_scaled(
 
     # checkpoint the edge list once — the caller's edge derivation may be
     # an expensive subtree (LSH candidates + verification); nodes/outdeg/
-    # adj below would otherwise each recompute it. Every prologue
-    # checkpoint is LAZY — the checkpoint still truncates the plan and
-    # pins the RDD so each frame is computed exactly once, but the
-    # materialization rides the consumer's (single) action instead of
-    # costing three dedicated prologue jobs per call.
-    sym = edges.select(
+    # adj below would otherwise each recompute it.
+    sym = checkpoint(edges.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)
+    ))
     outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     if symmetric:
         # with a SYMMETRIC edge list (every caller that undirects
@@ -76,16 +74,15 @@ def pagerank_scaled(
         # the outdeg aggregation's key set — the union+distinct pass
         # (a second full-edge shuffle + its own materialization) is
         # redundant and dropped.
-        outdeg = outdeg.localCheckpoint(eager=False)
+        outdeg = checkpoint(outdeg)
         nodes = outdeg.select(F.col("src").alias("node"))
     else:
-        nodes = (
+        nodes = checkpoint(
             sym.select(F.col("src").alias("node"))
             .unionByName(sym.select(F.col("dst").alias("node")))
             .distinct()
-            .localCheckpoint(eager=False)
         )
-    adj = sym.join(outdeg, "src").localCheckpoint(eager=False)
+    adj = checkpoint(sym.join(outdeg, "src"))
 
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
     for _ in range(iterations):
@@ -99,7 +96,10 @@ def pagerank_scaled(
             )
         )
         incoming = contrib.groupBy("dst").agg(F.sum("__c").alias("__in"))
-        ranks = (
+        # with FIXED iterations there is no per-round probe (unlike
+        # connected_components' convergence count): the checkpoint only
+        # caps plan growth
+        ranks = checkpoint(
             nodes.join(incoming, nodes["node"] == incoming["dst"], "left")
             .select(
                 "node",
@@ -107,13 +107,6 @@ def pagerank_scaled(
                 .cast("long")
                 .alias("rank"),
             )
-            # lazy: with FIXED iterations there is no per-round probe
-            # (unlike connected_components' convergence count), so the
-            # checkpoint only needs to cap plan growth — eager would
-            # schedule one job per superstep; lazy runs all supersteps
-            # inside the consumer's single job while still truncating
-            # the logical plan at each round
-            .localCheckpoint(eager=False)
         )
     return ranks
 
@@ -140,14 +133,14 @@ def triangle_counts(
     Returns (node, n_triangles) for every node incident to an edge,
     zeros included.
     """
-    e = (
+    # edge derivation may be expensive; used 4×
+    e = checkpoint(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).cast("long").alias("a"),
             F.greatest(F.col(src_col), F.col(dst_col)).cast("long").alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()  # edge derivation may be expensive; used 4×
     )
     deg = (
         e.select(F.col("a").alias("node"))
@@ -160,14 +153,13 @@ def triangle_counts(
     rank_lt = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = (
+    oriented = checkpoint(
         e.join(da, "a")
         .join(db, "b")
         .select(
             F.when(rank_lt, F.col("a")).otherwise(F.col("b")).alias("u"),
             F.when(rank_lt, F.col("b")).otherwise(F.col("a")).alias("v"),
         )
-        .localCheckpoint()
     )
     o1 = oriented.select(F.col("u"), F.col("v"))
     o2 = oriented.select(F.col("u").alias("v"), F.col("v").alias("w"))

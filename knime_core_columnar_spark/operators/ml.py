@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.operators.clustering import _sq_norm  # noqa: F401
 from knime_core_columnar_spark.operators.similarity import dot
+from knime_core_columnar_spark.session import checkpoint
 
 __all__ = [
     "logreg_lite", "naive_bayes_classify", "one_hot", "target_encode",
@@ -553,7 +554,8 @@ def decision_tree_lite(
     ]
     lo_arr = F.array(*[F.lit(float(v)) for v in los])
     w_arr = F.array(*[F.lit(float(v)) for v in widths])
-    binned = x.select(
+    # rows re-scanned once per level
+    binned = checkpoint(x.select(
         F.zip_with(
             "__x",
             F.zip_with(lo_arr, w_arr, lambda a, b: F.struct(
@@ -568,7 +570,7 @@ def decision_tree_lite(
         ).alias("__b"),
         "__y",
         F.lit(0).alias("__node"),
-    ).localCheckpoint()  # rows re-scanned once per level
+    ))
 
     def gini(p: int, n: int) -> float:
         if n == 0:
@@ -658,7 +660,7 @@ def decision_tree_lite(
                         F.element_at("__b", j + 1) <= b, F.lit(2 * node + 1)
                     ).otherwise(F.lit(2 * node + 2)),
                 ).otherwise(expr)
-            binned = binned.withColumn("__node", expr).localCheckpoint()
+            binned = checkpoint(binned.withColumn("__node", expr))
         open_nodes = next_open
 
     spark = df.sparkSession
@@ -781,7 +783,7 @@ def gbt_lite(
     sums are int64 micro-units — so splits, leaf values, and therefore
     the whole ensemble are identical at any parallelism; the score
     update ``F += lr · leaf(x)`` is a nested-CASE codegen projection
-    (localCheckpoint per round truncates lineage like every iterative
+    (a checkpoint per round truncates lineage like every iterative
     operator here).
 
     Cost: n_rounds × (max_depth+1) bounded histogram passes over the
@@ -811,7 +813,7 @@ def gbt_lite(
     ]
     lo_arr = F.array(*[F.lit(float(v)) for v in los])
     w_arr = F.array(*[F.lit(float(v)) for v in widths])
-    binned = x.select(
+    binned = checkpoint(x.select(
         F.zip_with(
             "__x",
             F.zip_with(lo_arr, w_arr, lambda a, b: F.struct(
@@ -822,7 +824,7 @@ def gbt_lite(
             ),
         ).alias("__b"),
         "__y",
-    ).localCheckpoint()
+    ))
     tot = binned.agg(
         F.count(F.lit(1)).alias("n"), F.sum("__y").alias("p")
     ).head()
@@ -930,9 +932,9 @@ def gbt_lite(
                 cur = cur.withColumn("__node", expr)
             open_nodes = next_open
         trees.append(tree)
-        cur = cur.withColumn(
+        cur = checkpoint(cur.withColumn(
             "__f", F.col("__f") + F.lit(lr) * tree_case(tree)
-        ).drop("__node", "__r6").localCheckpoint()
+        ).drop("__node", "__r6"))
 
     model = {"f0": f0, "lr": lr, "trees": trees,
              "los": los, "widths": widths, "bins": bins}

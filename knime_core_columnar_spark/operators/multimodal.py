@@ -320,18 +320,21 @@ def ahash_signatures(
     )
 
 
+#: corpus size up to which ``phash_near_dup_pairs`` runs its audit tier
+PHASH_AUDIT_MAX_ROWS = 100_000
+
+
 def _phash_auto_band_bits(
     corpus_count: int,
     n_slices: int = 64,
     max_hamming: int = 6,
-    audit_max_rows: int = 100_000,
 ) -> int:
     """Tier selection for ``phash_near_dup_pairs`` (mirrors
     ``embedding_near_dup_pairs``' auto-LSH): pick band_bits from the
     corpus size, subject to the pigeonhole constraint
     ``n_slices/band_bits > max_hamming``.
 
-    ≤ ``audit_max_rows`` rows → the NARROWEST valid bands (max recall
+    ≤ ``PHASH_AUDIT_MAX_ROWS`` rows → the NARROWEST valid bands (max recall
     margin; bucket density is harmless at audit scale); beyond that →
     the WIDEST valid bands (largest band-key space, so uniform buckets
     stay small at billions of assets)."""
@@ -346,7 +349,7 @@ def _phash_auto_band_bits(
             f"n_slices={n_slices}, max_hamming={max_hamming} — lower "
             "max_hamming or pass band_bits explicitly"
         )
-    return valid[-1] if corpus_count <= audit_max_rows else valid[0]
+    return valid[-1] if corpus_count <= PHASH_AUDIT_MAX_ROWS else valid[0]
 
 
 def phash_near_dup_pairs(
@@ -357,7 +360,6 @@ def phash_near_dup_pairs(
     n_slices: int = 64,
     band_bits: int | None = None,
     max_bucket: int | None = 1_000,
-    audit_max_rows: int = 100_000,
     corpus_count: int | None = None,
 ) -> DataFrame:
     """Perceptual-hash near-duplicate pairs over binary payloads — the
@@ -382,10 +384,10 @@ def phash_near_dup_pairs(
       guarantee ≤ 15 bits): only 16·16 = 256 buckets exist —
       QUADRATIC past ~10⁵ assets (measured: the x100 rehearsal
       replica, 500k docs → ~10¹¹ candidate pairs — killed, see
-      SCALE.md). Auto-chosen only ≤ ``audit_max_rows``.
+      SCALE.md). Auto-chosen only ≤ ``PHASH_AUDIT_MAX_ROWS``.
     - SCALE tier, wide bands (e.g. ``band_bits=16``: 4 bands,
       guarantee ≤ 3 bits): 4·65536 buckets — at 10⁹ assets a uniform
-      bucket holds ~6·10⁴ rows. Auto-chosen past ``audit_max_rows``,
+      bucket holds ~6·10⁴ rows. Auto-chosen past ``PHASH_AUDIT_MAX_ROWS``,
       subject to the pigeonhole constraint (max_hamming=6 needs > 6
       bands, so the widest valid band is 8 bits there).
     ``max_bucket`` defaults FINITE (10³): overfull buckets are skipped
@@ -419,16 +421,14 @@ def phash_near_dup_pairs(
             # corpus_count — on filtered/derived frames this is a full
             # Spark job, not a metadata read.
             corpus_count = df.count()
-        band_bits = _phash_auto_band_bits(
-            corpus_count, n_slices, max_hamming, audit_max_rows
-        )
+        band_bits = _phash_auto_band_bits(corpus_count, n_slices, max_hamming)
     elif corpus_count is None:
         # band_bits explicit: the count would ONLY pick the join
         # strategy — not worth a full pass over a derived frame. Take
         # the conservative (scale-safe) merge hint; callers who want the
         # small-corpus broadcast back pass corpus_count (the catalog
         # threads parquet footer counts).
-        corpus_count = audit_max_rows + 1
+        corpus_count = PHASH_AUDIT_MAX_ROWS + 1
     n_bands = n_slices // band_bits
     if max_hamming >= n_bands:
         raise ValueError(
@@ -453,7 +453,7 @@ def phash_near_dup_pairs(
     # and the forced sort was a measured bench tax (so the hint is
     # conditioned on build-side size).
     a_side = cand.alias("a")
-    if corpus_count > audit_max_rows:
+    if corpus_count > PHASH_AUDIT_MAX_ROWS:
         a_side = a_side.hint("merge")
     pairs = (
         a_side

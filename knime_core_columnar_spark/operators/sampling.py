@@ -21,6 +21,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from knime_core_columnar_spark.session import checkpoint
+
 __all__ = [
     "hash_bucket",
     "deterministic_sample",
@@ -137,7 +139,7 @@ def global_index(
     ``text.build_vocab`` (frequency-ranked ids); a position is just the
     exclusive prefix sum of ones, so this delegates to
     ``distributed_cumsum`` — ONE copy of the correctness-sensitive
-    two-phase machinery (whose lazy localCheckpoint guarantees the
+    two-phase machinery (whose checkpoint guarantees the
     totals pass and the numbering pass see the same partitioning, with
     or without exchange reuse)."""
     return distributed_cumsum(df, order_cols, F.lit(1), pos_col, exclusive=True)
@@ -249,22 +251,22 @@ def distributed_cumsum(
     BY ...)`` at any parallelism. ``exclusive=True`` gives the
     sum of strictly-preceding rows (the bin-packing prefix).
 
-    The sorted frame is lazily ``localCheckpoint``-ed before the totals
-    and numbering passes: both consume the SAME materialized partitions,
-    so ``spark_partition_id()`` agrees between them by construction —
-    correctness no longer depends on Catalyst's exchange-reuse firing
+    The sorted frame is checkpointed (``session.checkpoint``) before
+    the totals and numbering passes: both consume the SAME materialized
+    partitions, so ``spark_partition_id()`` agrees between them by
+    construction — correctness no longer depends on Catalyst's
+    exchange-reuse firing
     (``spark.sql.exchange.reuse``, AQE re-planning, or a
     nondeterministic source could otherwise silently desynchronize the
-    offsets). Cost: the sorted rows are written once to executor
-    block storage (MEMORY_AND_DISK) — the same I/O a shuffle of this
-    frame already pays, and strictly cheaper than a wrong answer."""
+    offsets). Cost: the sorted rows are written once — the same I/O a
+    shuffle of this frame already pays, and strictly cheaper than a
+    wrong answer."""
     from pyspark.sql import Window
 
-    s = (
+    s = checkpoint(
         df.withColumn("__val", value_col.cast("long"))
         .orderBy(*order_cols)
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
     )
     totals = s.groupBy("__pid").agg(F.sum("__val").alias("__t"))
     w_cum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)

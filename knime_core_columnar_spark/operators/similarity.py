@@ -23,6 +23,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.schema import read_parquet
+from knime_core_columnar_spark.session import checkpoint
+
+#: the largest query batch ``brute_force_topk`` collects to the driver
+BRUTE_FORCE_MAX_QUERY_ROWS = 10_000
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -96,7 +100,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_query_rows: int = 10_000,
 ) -> DataFrame:
     """Exact cosine top-k: ship the query batch to the executors as a
     kernel constant, score every corpus row against ALL queries in ONE
@@ -104,33 +107,33 @@ def brute_force_topk(
     keeps a k-row heap per partition — no global sort).
 
     The query batch is small BY CONTRACT (it was always broadcast; now
-    the same bound is enforced — > ``max_query_rows`` raises instead of
-    materializing an unbounded batch on the driver: batch your queries
-    or use the LSH/IVF tiers). EAGER contract: constructing the result
-    DataFrame runs ONE small job (the bounded query-batch collect) —
-    the deliberate exception to the repo's no-job-at-plan-construction
-    rule, because the batch must exist before the kernel closure can
-    capture it, and the alternative (per-pair transfer) costs m× the
-    corpus bytes at every execution. A crossJoin + pairwise pandas UDF
-    would carry every corpus VECTOR across Arrow once per query (m× the
-    corpus bytes); here the corpus crosses Arrow exactly once and the
-    m·d dot products run as m dimension-sequential vectorized
-    accumulations per batch — the SAME floating-point order as the
-    ``dot`` expression and DuckDB's list_dot_product, so cosines stay
-    bit-identical to the SQL oracle.
+    the same bound is enforced — > ``BRUTE_FORCE_MAX_QUERY_ROWS`` raises
+    instead of materializing an unbounded batch on the driver: batch
+    your queries or use the LSH/IVF tiers). EAGER contract: constructing
+    the result DataFrame runs ONE small job (the bounded query-batch
+    collect) — the deliberate exception to the repo's
+    no-job-at-plan-construction rule, because the batch must exist
+    before the kernel closure can capture it, and the alternative
+    (per-pair transfer) costs m× the corpus bytes at every execution. A
+    crossJoin + pairwise pandas UDF would carry every corpus VECTOR
+    across Arrow once per query (m× the corpus bytes); here the corpus
+    crosses Arrow exactly once and the m·d dot products run as m
+    dimension-sequential vectorized accumulations per batch — the SAME
+    floating-point order as the ``dot`` expression and DuckDB's
+    list_dot_product, so cosines stay bit-identical to the SQL oracle.
     Rounding happens JVM-side (HALF_UP), never in numpy.
     """
     qrows = (
         queries.select(F.col(id_col), F.col(vec_col))
         .filter(F.col(vec_col).isNotNull())
-        .limit(max_query_rows + 1)
+        .limit(BRUTE_FORCE_MAX_QUERY_ROWS + 1)
         .collect()
     )
-    if len(qrows) > max_query_rows:
+    if len(qrows) > BRUTE_FORCE_MAX_QUERY_ROWS:
         raise ValueError(
-            f"brute_force_topk: query batch exceeds max_query_rows="
-            f"{max_query_rows} — the exact tier scores corpus × batch; "
-            "batch the queries or use the LSH/IVF tiers"
+            f"brute_force_topk: query batch exceeds "
+            f"{BRUTE_FORCE_MAX_QUERY_ROWS} rows — the exact tier scores "
+            "corpus × batch; batch the queries or use the LSH/IVF tiers"
         )
     qids = [r[0] for r in qrows]
     qvecs = [list(r[1]) for r in qrows]
@@ -954,14 +957,14 @@ def _bm25_score_terms(
     term batch — the shared core of ``bm25_topk`` (terms from query
     text) and ``rm3_expand_topk`` (terms from relevance feedback).
     Exactness and plan shape documented on ``bm25_topk``."""
-    # materialize the postings table ONCE (lazy localCheckpoint) —
-    # it feeds three consumers (doc lengths, document frequencies, the
-    # candidate join) and the executed plan showed the corpus tokenize +
-    # explode + count shuffle re-running per consumer (ReusedExchange
-    # does not fire across differently-shaped descendants). The
+    # materialize the postings table ONCE — it feeds three consumers
+    # (doc lengths, document frequencies, the candidate join) and the
+    # executed plan showed the corpus tokenize + explode + count
+    # shuffle re-running per consumer (ReusedExchange does not fire
+    # across differently-shaped descendants). The
     # materialized frame is the (doc, term, tf) index — the build-once
     # cost every lexical index pays.
-    tf = tf.localCheckpoint(eager=False)
+    tf = checkpoint(tf)
     dl = tf.groupBy("__id").agg(F.sum("__tf").alias("__dl"))
     # corpus stats from the dl table (doc-count-sized, never corpus-sized)
     stats = dl.agg(

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from knime_core_columnar_spark.session import checkpoint
+
 
 #: Tiny per-language stopword marker sets for the n-gram/stopword-voting
 #: language heuristic. Deliberately small + SQL-expressible.
@@ -632,13 +634,12 @@ def bigram_logprob(
     rows = df.select(
         id_col, F.explode(bi).alias("__p")
     ).select(id_col, F.col("__p.w1").alias("__w1"), F.col("__p.w2").alias("__w2"))
-    # materialize the count table once (lazy localCheckpoint, the
-    # kn_bigram/collocations discipline) — it feeds the context totals
-    # AND the model join, and exchange reuse does not fire across the
-    # differently-shaped consumers
-    c12 = (
+    # materialize the count table once (the kn_bigram/collocations
+    # discipline) — it feeds the context totals AND the model join, and
+    # exchange reuse does not fire across the differently-shaped
+    # consumers
+    c12 = checkpoint(
         rows.groupBy("__w1", "__w2").agg(F.count(F.lit(1)).alias("__c12"))
-        .localCheckpoint(eager=False)
     )
     c1 = c12.groupBy("__w1").agg(F.sum("__c12").alias("__c1"))
     v = c1.agg(F.count(F.lit(1)).cast("double").alias("__V"))
@@ -1719,16 +1720,15 @@ def collocations_pmi(
     rows = df.select(F.explode(bi).alias("__p")).select(
         F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2")
     )
-    # materialize the count table ONCE (lazy localCheckpoint — the
-    # kn_bigram_logprob discipline): c12 feeds four consumers (left and
+    # materialize the count table ONCE (the kn_bigram_logprob
+    # discipline): c12 feeds four consumers (left and
     # right marginals, the N₂ total, the scored join) and the executed
     # plan showed ReusedExchange=0 — the corpus tokenize + bigram
     # explode + count shuffle ran FOUR times. The materialized frame is
     # vocabulary²-observed-sized (≪ corpus), the same budget the KN
     # model table already pays.
-    c12 = (
+    c12 = checkpoint(
         rows.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=False)
     )
     cl = c12.groupBy("w1").agg(F.sum("c12").alias("c_left"))
     cr = c12.groupBy("w2").agg(F.sum("c12").alias("c_right"))
@@ -1843,7 +1843,7 @@ def kn_bigram_logprob(
     are scored (the join is the corpus's own transitions).
 
     Scale shape: bigram explode (codegen) → one count aggregation,
-    MATERIALIZED once (lazy localCheckpoint — the four derived
+    MATERIALIZED once (``session.checkpoint`` — the four derived
     aggregates below would otherwise each replay the corpus explode:
     measured 15 parquet scans in the un-materialized plan, because
     exchange reuse does not fire across the AQE-replanned branches) →
@@ -1866,10 +1866,9 @@ def kn_bigram_logprob(
     rows = df.select(
         id_col, F.explode(bi).alias("__p")
     ).select(id_col, F.col("__p.w1").alias("__w1"), F.col("__p.w2").alias("__w2"))
-    c12 = (
+    c12 = checkpoint(
         rows.groupBy("__w1", "__w2")
         .agg(F.count(F.lit(1)).alias("__c12"))
-        .localCheckpoint(eager=False)
     )
     # context totals + distinct-continuation counts, from the count table
     left = c12.groupBy("__w1").agg(

@@ -1,6 +1,8 @@
 """Round-12 optimization pins: the BSP loops run ONE driver action per
-superstep (lazy localCheckpoint materialized by the convergence probe /
-the consumer's action) instead of dedicated eager-checkpoint jobs.
+superstep (lazy checkpoints materialized by the convergence probe /
+the consumer's action) instead of dedicated eager-checkpoint jobs, and
+the triangle and tree builders' checkpoints schedule no job of their
+own.
 
 The job-count bounds below sit between the measured totals of the old
 (eager) and new (lazy) implementations on fixed toy graphs with this
@@ -91,6 +93,71 @@ def test_pagerank_symmetric_lazy_matches_eager_semantics(spark):
         for r in pagerank_scaled(edges, iterations=3).collect()
     }
     assert sym == gen and 7 in sym
+
+
+def test_triangle_counts_checkpoints_are_lazy(spark):
+    """triangle_counts pins its edge set and its oriented edges through
+    ``session.checkpoint``, which is lazy: neither checkpoint schedules a
+    dedicated materialization job. Measured on this K4-plus-pendant graph:
+    16 jobs with the two eager checkpoints, 14 lazy — pin strictly under
+    the eager count."""
+    from knime_core_columnar_spark.operators.graph import triangle_counts
+
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    edges = spark.createDataFrame(
+        k4 + [(2, 1), (1, 1), (5, 1), (1, 5)], "src long, dst long"
+    )
+
+    def go():
+        return triangle_counts(edges).collect()
+
+    rows, jobs = _run_in_group(spark, go)
+    assert {r["node"]: r["n_triangles"] for r in rows} == {
+        1: 3, 2: 3, 3: 3, 4: 3, 5: 0}
+    assert jobs <= 15, f"triangle_counts scheduled {jobs} jobs (eager?)"
+
+
+def _tree_data(spark):
+    rows = [([(i % 100) / 100.0, float((i * 7) % 13) / 13.0],
+             int(i % 100 >= 50)) for i in range(200)]
+    return spark.createDataFrame(rows, "embedding array<double>, label int")
+
+
+def test_decision_tree_level_checkpoints_are_lazy(spark):
+    """decision_tree_lite's binned frame and its per-level node
+    assignment are lazy checkpoints, materialized by the next level's
+    histogram job: measured 10 jobs eager, 8 lazy for a depth-2 tree."""
+    from pyspark.sql import functions as F
+
+    from knime_core_columnar_spark.operators.ml import decision_tree_lite
+
+    df = _tree_data(spark)
+
+    def go():
+        return decision_tree_lite(
+            df, F.col("label"), max_depth=2, bins=16, min_leaf=5)[0]
+
+    tree, jobs = _run_in_group(spark, go)
+    assert tree[0]["feature"] == 0 and tree[0]["n"] == 200
+    assert jobs <= 9, f"decision_tree_lite scheduled {jobs} jobs (eager?)"
+
+
+def test_gbt_round_checkpoints_are_lazy(spark):
+    """gbt_lite's binned frame and per-round score frame are lazy
+    checkpoints: measured 22 jobs eager, 18 lazy for the default three
+    rounds of depth 2."""
+    from pyspark.sql import functions as F
+
+    from knime_core_columnar_spark.operators.ml import gbt_lite
+
+    df = _tree_data(spark)
+
+    def go():
+        return gbt_lite(df, F.col("label"))[0]
+
+    model, jobs = _run_in_group(spark, go)
+    assert len(model["trees"]) == 3
+    assert jobs <= 21, f"gbt_lite scheduled {jobs} jobs (eager regression?)"
 
 
 def test_curation_gate_keep_equals_flags_conjunction(spark):

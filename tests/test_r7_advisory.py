@@ -167,7 +167,7 @@ def test_phash_auto_band_bits_tier_switch():
     # audit scale -> narrowest valid bands (max recall margin)
     assert _phash_auto_band_bits(500, 64, 6) == 4
     assert _phash_auto_band_bits(100_000, 64, 6) == 4
-    # past audit_max_rows -> widest valid bands; max_hamming=6 needs
+    # past PHASH_AUDIT_MAX_ROWS -> widest valid bands; max_hamming=6 needs
     # > 6 bands so 16-bit bands (4 bands) are pigeonhole-invalid -> 8
     assert _phash_auto_band_bits(100_001, 64, 6) == 8
     # a scale corpus with max_hamming <= 3 can take the 16-bit bands

@@ -125,7 +125,7 @@ def test_distributed_cumsum_matches_single_window(spark):
 def test_distributed_cumsum_offsets_stable_without_exchange_reuse(spark):
     """The offsets pass and the numbering pass must see the SAME
     partitioning even when Catalyst exchange reuse is disabled — the
-    lazy localCheckpoint inside distributed_cumsum guarantees it. The
+    checkpoint inside distributed_cumsum guarantees it. The
     invariant max(inclusive cumsum) == total would break loudly if the
     two passes ever desynchronized."""
     from pyspark.sql import functions as F
